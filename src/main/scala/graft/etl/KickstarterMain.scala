@@ -30,7 +30,8 @@ object KickstarterMain {
       println(s"[transform] rows=${campaigns.count()} cols=${campaigns.columns.length}")
       Transform.stateCounts(campaigns).collect()
         .foreach(r => println(s"[inspect] state ${r.getString(0)} -> ${r.getLong(1)}"))
-      val counts = graft.star.StarBuilder.runPipeline(spark, csvPath, outDir)
+      // the frame cached above feeds the load: the CSV is not parsed again
+      val counts = graft.star.StarBuilder.load(spark, campaigns, outDir)
       counts.toSeq.sortBy(_._1)
         .foreach { case (t, n) => println(s"[load] $t rows=$n") }
       // S3 parity: register the warehouse in the session catalog so every

@@ -20,7 +20,10 @@ package graft.operators
   * calling thread (no thread spawn for the common 2-3-way case's tail);
   * all complete before return. The first failure (in argument order) is
   * rethrown after every thunk has finished — no thunk is ever abandoned
-  * mid-write — with later failures attached as suppressed.
+  * mid-write — with later failures attached as suppressed. An interrupt
+  * of the calling thread does not cut the wait short: the joins are
+  * uninterruptible and the interrupt flag is restored once every thunk has
+  * finished, for the caller to act on.
   *
   * Thread-locals: Spark's job group / description properties are
   * inherited by child threads at creation (`InheritableThreadLocal`), so
@@ -44,7 +47,13 @@ object ConcurrentJobs {
     }
     try thunks.last()
     catch { case e: Throwable => failures(thunks.size - 1) = e }
-    spawned.foreach(_.join())
+    var interrupted = false
+    spawned.foreach { th =>
+      while (th.isAlive)
+        try th.join()
+        catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
     val firsts = failures.filter(_ != null)
     firsts.headOption.foreach { first =>
       firsts.tail.foreach { e => if (e ne first) first.addSuppressed(e) }

@@ -1,8 +1,16 @@
 package graft.star
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 
 import graft.SparkTestBase
 import graft.etl.{Extract, Transform}
@@ -10,9 +18,10 @@ import graft.etl.{Extract, Transform}
 /** Golden end-to-end parity tests for the star-schema build (SURVEY §5.2
   * item 2): dim cardinalities, deterministic surrogate keys, date
   * attributes (incl. the weekday-numbering trap), FK integrity, and the
-  * INSERT-OR-IGNORE upsert semantics.
+  * INSERT-OR-IGNORE upsert semantics. The pipeline tests also pin what
+  * `runPipeline` costs and leaves behind: one CSV parse, no cached block.
   */
-class StarBuilderSpec extends SparkTestBase {
+class StarBuilderSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   lazy val campaigns = Transform.campaigns(
     Extract.campaignsCsv(spark, fixturePath("kickstarter_fixture.csv"))).cache()
@@ -105,5 +114,82 @@ class StarBuilderSpec extends SparkTestBase {
     assert(byName == 6)
     val names = spark.catalog.listTables().collect().map(_.name.toLowerCase).toSet
     assert(Set("dim_date", "dim_state", "dim_category", "fact_campaigns").subsetOf(names))
+  }
+
+  /** The fixture at a fresh path: its plans match no frame another test
+    * cached, so what a test observes of caching and scans is its own.
+    */
+  private def freshFixture(): String = {
+    val csv = Files.createTempDirectory("graft_star_csv").resolve("campaigns.csv")
+    Files.copy(Paths.get(fixturePath("kickstarter_fixture.csv")), csv)
+    csv.toString
+  }
+
+  private def campaignsOf(csv: String) = Transform.campaigns(Extract.campaignsCsv(spark, csv))
+
+  test("runPipeline writes exactly the rows of build, table by table") {
+    val csv = freshFixture()
+    val out = Files.createTempDirectory("graft_star_rows").toString
+    StarBuilder.runPipeline(spark, csv, out)
+    StarBuilder.build(campaignsOf(csv)).foreach { case (name, expected) =>
+      val written = spark.read.parquet(s"$out/$name")
+      assert(written.exceptAll(expected).isEmpty, s"$name: written rows build lacks")
+      assert(expected.exceptAll(written).isEmpty, s"$name: build rows not written")
+    }
+  }
+
+  /** Rows output by the CSV scans of `csv` in every plan `body` runs, the
+    * plans its cached relations were built by included, each scan node
+    * counted once.
+    */
+  private def csvRowsScannedDuring(csv: String)(body: => Unit): Long = {
+    val scans = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[FileSourceScanExec, java.lang.Boolean]())
+    def csvScans(plan: SparkPlan): Seq[FileSourceScanExec] = flatMap(plan) {
+      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[CSVFileFormat] &&
+          s.relation.location.rootPaths.exists(_.toString.endsWith(csv)) => Seq(s)
+      case m: InMemoryTableScanExec => csvScans(m.relation.cachedPlan)
+      case _ => Nil
+    }
+    val barrier = spark.range(1)
+    val barrierSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      private def record(qe: QueryExecution): Unit = {
+        csvScans(qe.executedPlan).foreach(scans.add)
+        if (qe eq barrier.queryExecution) barrierSeen.countDown()
+      }
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        record(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit =
+        record(qe)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener events arrive in order on one bus: once the barrier
+      // query's event is in, every event `body` caused is too
+      barrier.collect()
+      assert(barrierSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.listenerManager.unregister(listener)
+    scans.asScala.toSeq.map(_.metrics("numOutputRows").value).sum
+  }
+
+  test("runPipeline parses the CSV once") {
+    val csv = freshFixture()
+    val out = Files.createTempDirectory("graft_star_parse").toString
+    // one parse outputs the fixture's 12 data rows (the null-name drop
+    // runs above the scan)
+    assert(csvRowsScannedDuring(csv)(StarBuilder.runPipeline(spark, csv, out)) == 12L)
+  }
+
+  test("runPipeline leaves no cached relation, also when a write throws") {
+    val csv = freshFixture()
+    def cached = campaignsOf(csv).storageLevel != StorageLevel.NONE
+    StarBuilder.runPipeline(spark, csv, Files.createTempDirectory("graft_star_ok").toString)
+    assert(!cached)
+    // a regular file where the warehouse directory should be
+    val notADir = Files.createTempFile("graft_star", ".file").toString
+    intercept[Exception](StarBuilder.runPipeline(spark, csv, notADir))
+    assert(!cached)
   }
 }
