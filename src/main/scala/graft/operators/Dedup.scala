@@ -434,40 +434,57 @@ object Dedup {
     * appended rows and the stored rows cannot disagree; the corpus files
     * are never rewritten and meta is untouched.
     *
-    * The append is a [[graft.sources.Segments]] COMMIT: both frames land
-    * in one segment whose marker rename is the atomic publish, so a crash
-    * between the bucket and set writes can never leave bucket rows whose
-    * set rows are missing (candidates that silently fail the verify join
-    * — the r8 advice finding), and a caller that names the segment
-    * deterministically (`seg = Some("batch-<id>")` from a streaming
-    * checkpoint, as [[graft.streaming.MinhashIngestStream]] does) gets
-    * exactly-once appends under at-least-once batch replay — an already
-    * committed segment is skipped whole. The caller owns the ingest
-    * invariant (ids disjoint from what the index already holds) and
-    * ordering (append AFTER the batch's own probe).
+    * The append is one [[graft.sources.Segments.append]]: both frames
+    * land in one segment whose marker rename is the atomic publish, so a
+    * crash between the bucket and set writes can never leave bucket rows
+    * whose set rows are missing (candidates that silently fail the verify
+    * join), and a deterministic `seg` (e.g. `batch-<id>`) is skipped whole
+    * once committed. The caller owns the ingest invariant (ids disjoint
+    * from what the index already holds) and ordering (append AFTER the
+    * batch's own probe).
     */
   def appendToMinhashIndex(
       increment: DataFrame, dir: String,
       idCol: String = "doc_id", textCol: String = "text",
-      seg: Option[String] = None): Unit = {
-    val spark = increment.sparkSession
-    val segName = seg.getOrElse(
-      "append-" + java.util.UUID.randomUUID().toString.take(8))
-    if (Segments.isCommitted(spark, dir, segName)) return
-    val (n, numHashes, bands, seed) = minhashMeta(spark, dir)
-    val r = numHashes / bands
-    CacheScope.scoped {
-      val sets = CacheScope.pin(
-        shingled(increment, idCol, textCol, n), StorageLevel.MEMORY_AND_DISK)
-      Segments.writePart(
-        bandBuckets(
-          sets.select(col("id"), minhashSignature(col("shingles"), numHashes, seed).as("sig")),
-          bands, r),
-        dir, "buckets", segName)
-      Segments.writePart(hashedKeySets(sets), dir, "sets", segName)
-    }
-    Segments.commit(spark, dir, segName)
+      seg: Option[String] = None): Unit = CacheScope.scoped {
+    val (sets, buckets) = minhashFrames(increment, dir, idCol, textCol)
+    Segments.append(increment.sparkSession, dir, seg, minhashLayout,
+      Seq(buckets, hashedKeySets(sets)))
   }
+
+  private val minhashLayout: Segments.Layout = Seq("buckets" -> Nil, "sets" -> Nil)
+
+  /** The increment's pinned shingle sets and band buckets at the index's
+    * meta parameters — computed once per batch and shared by the probe
+    * and the segment parts (the text kernel is the dominant per-batch
+    * cost). Pins follow the caller's [[CacheScope]].
+    */
+  private def minhashFrames(increment: DataFrame, dir: String,
+      idCol: String, textCol: String): (DataFrame, DataFrame) = {
+    val (n, numHashes, bands, seed) = minhashMeta(increment.sparkSession, dir)
+    val sets = CacheScope.pin(
+      shingled(increment, idCol, textCol, n), StorageLevel.MEMORY_AND_DISK)
+    val buckets = CacheScope.pin(
+      bandBuckets(
+        sets.select(col("id"), minhashSignature(col("shingles"), numHashes, seed).as("sig")),
+        bands, numHashes / bands),
+      StorageLevel.MEMORY_AND_DISK)
+    (sets, buckets)
+  }
+
+  /** The MinHash index's ingest kernel ([[graft.streaming.IndexIngest]]):
+    * a batch's bucket and set parts plus its touching pairs
+    * ([[incrementalNearDupPairs]] over the shared kernel frames).
+    */
+  def minhashIngestKernel(
+      dir: String, idCol: String, textCol: String,
+      threshold: Double): graft.streaming.IndexIngest.Kernel =
+    graft.streaming.IndexIngest.Kernel(dir, minhashLayout, { batch =>
+      val (sets, buckets) = minhashFrames(batch, dir, idCol, textCol)
+      (Seq(buckets, hashedKeySets(sets)),
+        incrementalPairsFromKernel(batch.sparkSession, dir, sets, buckets,
+          threshold, hinted = fitsBroadcast(batch)))
+    })
 
   /** Near-dup pairs TOUCHING an increment — increment-vs-corpus and
     * increment-vs-increment, never corpus-vs-corpus — against a
@@ -539,7 +556,7 @@ object Dedup {
   /** [[incrementalNearDupPairs]] past the kernel: probe the stored index
     * with ALREADY-COMPUTED increment shingle sets and band buckets, so a
     * caller that also needs them for an append (the streaming ingest)
-    * pays the text kernel once ([[minhashIngestBatch]]). `hinted` carries
+    * pays the text kernel once ([[minhashIngestKernel]]). `hinted` carries
     * the [[fitsBroadcast]] verdict on the raw increment: when false, every
     * explicit broadcast hint on an increment-bounded side is dropped and
     * the optimizer chooses the join strategy (shuffle degradation instead
@@ -582,58 +599,6 @@ object Dedup {
       Segments.readPart(spark, dir, "sets")
         .join(hint(incKeys.select("id")), Seq("id"), "left_anti"))
     verifyJaccardHashed(candidates, sets, threshold, broadcastPairs = hinted)
-  }
-
-  /** One streaming-ingest micro-batch against a [[writeMinhashIndex]]
-    * directory, KERNEL-FUSED: the batch's shingle sets and band buckets
-    * are computed once and shared by the probe (whose result goes to
-    * `writePairs`) and the segment append — previously the text kernel
-    * (the dominant per-batch cost) ran twice, once in
-    * [[incrementalNearDupPairs]] and again in [[appendToMinhashIndex]],
-    * and the index meta was read twice. Contracts are unchanged: the
-    * append skips whole when `segName` is already committed, and a
-    * replayed probe rewrites identical output (crash-replay idempotence,
-    * MinhashIngestStreamSpec).
-    *
-    * The batch's three independent actions — the pair write and the two
-    * segment-part writes — are submitted CONCURRENTLY (§2.6,
-    * [[ConcurrentJobs]]): all three consume only the pinned kernel frames
-    * plus the index state FROZEN into the probe's plan before any write
-    * starts (`Segments.readPart` lists files at plan construction), and
-    * the marker commit still happens strictly after every write lands, so
-    * crash-replay semantics are byte-identical. Probe-before-append held
-    * the ordering story when the writes were serialized; what actually
-    * makes each pair form exactly once is that the probe result is
-    * INVARIANT to whether the batch's own segment is visible (its
-    * candidate `distinct` and anti-joined verification sets collapse the
-    * batch's own rows — the same invariance the post-commit crash-replay
-    * case always needed, pinned by the spec's replay matrix).
-    */
-  def minhashIngestBatch(
-      spark: SparkSession, indexDir: String, batch: DataFrame,
-      idCol: String, textCol: String, threshold: Double,
-      segName: String, writePairs: DataFrame => Unit): Unit = CacheScope.scoped {
-    val (n, numHashes, bands, seed) = minhashMeta(spark, indexDir)
-    val incSets = CacheScope.pin(
-      shingled(batch, idCol, textCol, n), StorageLevel.MEMORY_AND_DISK)
-    val incBuckets = CacheScope.pin(
-      bandBuckets(
-        incSets.select(col("id"),
-          minhashSignature(col("shingles"), numHashes, seed).as("sig")),
-        bands, numHashes / bands),
-      StorageLevel.MEMORY_AND_DISK)
-    // plan construction BEFORE the fan-out: the probe's index listing is
-    // frozen here, so the concurrent segment writes cannot influence it
-    val pairs = incrementalPairsFromKernel(spark, indexDir, incSets, incBuckets,
-      threshold, hinted = fitsBroadcast(batch))
-    if (Segments.isCommitted(spark, indexDir, segName)) writePairs(pairs)
-    else {
-      ConcurrentJobs.awaitAll(
-        () => Segments.writePart(incBuckets, indexDir, "buckets", segName),
-        () => Segments.writePart(hashedKeySets(incSets), indexDir, "sets", segName),
-        () => writePairs(pairs))
-      Segments.commit(spark, indexDir, segName)
-    }
   }
 
   /** Eval-set contamination probe: for each document of a (small) eval
@@ -1231,7 +1196,7 @@ object Dedup {
 
   /** [[incrementalSemanticNearDupPairs]] past the cell assignment: probe
     * with ALREADY-COMPUTED increment cells, shared with the append by
-    * [[semanticIngestBatch]].
+    * [[semanticIngestKernel]].
     */
   private def semanticPairsFromKernel(
       spark: SparkSession, dir: String, inc: DataFrame, incCells: DataFrame,
@@ -1260,40 +1225,38 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
   }
 
-  /** One streaming-ingest micro-batch against a [[writeSemanticIndex]]
-    * directory, KERNEL-FUSED like [[minhashIngestBatch]]: the batch's
-    * cell assignments are computed once and shared by the probe and the
-    * segment append, and the meta/centroid driver reads happen once per
-    * batch instead of twice. Contracts unchanged (committed segments skip
-    * whole — SemanticIngestStreamSpec); the pair write and the two
-    * segment-part writes are submitted concurrently (§2.6) under the same
-    * invariance argument as [[minhashIngestBatch]] — the probe plan's
-    * index listing freezes before the fan-out, the marker commit happens
-    * strictly after every write lands, and the probe result is invariant
-    * to the batch's own segment being visible (the post-commit
-    * crash-replay case the spec already pins).
+  private val semanticLayout: Segments.Layout = Seq("assigned" -> Nil, "vecs" -> Nil)
+
+  /** The increment's (id, vec) rows and their pinned multi-assignments
+    * to the STORED centroids — computed once per batch and shared by the
+    * probe and the segment parts.
     */
-  def semanticIngestBatch(
-      spark: SparkSession, indexDir: String, batch: DataFrame,
-      idCol: String, vecCol: String, threshold: Double,
-      segName: String, writePairs: DataFrame => Unit): Unit = CacheScope.scoped {
-    val (nassign, cents) = semanticCentroids(spark, indexDir)
-    val v = batch.select(col(idCol).as("id"), col(vecCol).as("vec"))
+  private def semanticFrames(increment: DataFrame, dir: String,
+      idCol: String, vecCol: String): (DataFrame, DataFrame) = {
+    val (nassign, cents) = semanticCentroids(increment.sparkSession, dir)
+    val v = increment.select(col(idCol).as("id"), col(vecCol).as("vec"))
     val assigned = CacheScope.pin(
       v.select(col("id"), col("vec"),
         explode(nearestCells(col("vec"), cents, nassign)).as("cell")),
       StorageLevel.MEMORY_AND_DISK)
-    val pairs = semanticPairsFromKernel(spark, indexDir, ScaleOut(v),
-      assigned.select("id", "cell"), threshold)
-    if (Segments.isCommitted(spark, indexDir, segName)) writePairs(pairs)
-    else {
-      ConcurrentJobs.awaitAll(
-        () => Segments.writePart(assigned, indexDir, "assigned", segName),
-        () => Segments.writePart(v, indexDir, "vecs", segName),
-        () => writePairs(pairs))
-      Segments.commit(spark, indexDir, segName)
-    }
+    (v, assigned)
   }
+
+  /** The semantic index's ingest kernel ([[graft.streaming.IndexIngest]]):
+    * a batch's assignment and vector parts plus its touching pairs
+    * ([[incrementalSemanticNearDupPairs]] over the shared assignments).
+    * The quantizer is NOT retrained on append: codebook drift is the
+    * rebuild trigger, observable via [[semanticDrift]].
+    */
+  def semanticIngestKernel(
+      dir: String, idCol: String, vecCol: String,
+      threshold: Double): graft.streaming.IndexIngest.Kernel =
+    graft.streaming.IndexIngest.Kernel(dir, semanticLayout, { batch =>
+      val (v, assigned) = semanticFrames(batch, dir, idCol, vecCol)
+      (Seq(assigned, v),
+        semanticPairsFromKernel(batch.sparkSession, dir, ScaleOut(v),
+          assigned.select("id", "cell"), threshold))
+    })
 
   /** Persist a hyperplane-LSH near-dup index for an embedding corpus:
     * radius-0 bucket rows (`dir/buckets`: id, table, bucket), the vectors
@@ -1333,19 +1296,9 @@ object Dedup {
   def appendToEmbeddingIndex(
       increment: DataFrame, dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      seg: Option[String] = None): Unit = {
-    val spark = increment.sparkSession
-    val segName = seg.getOrElse(
-      "append-" + java.util.UUID.randomUUID().toString.take(8))
-    if (Segments.isCommitted(spark, dir, segName)) return
-    val (planes, tables, dim, seed) = embeddingMeta(spark, dir)
-    val v = increment.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    Segments.writePart(
-      Ann.withBuckets(v, "vec", planes, tables, dim, seed)
-        .select("id", "table", "bucket"),
-      dir, "buckets", segName)
-    Segments.writePart(v, dir, "vecs", segName)
-    Segments.commit(spark, dir, segName)
+      seg: Option[String] = None): Unit = CacheScope.scoped {
+    val (v, _, buckets) = embeddingFrames(increment, dir, idCol, vecCol)
+    Segments.append(increment.sparkSession, dir, seg, embeddingLayout, Seq(buckets, v))
   }
 
   /** Append an increment's cell assignments and vector rows to a
@@ -1358,21 +1311,9 @@ object Dedup {
   def appendToSemanticIndex(
       increment: DataFrame, dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      seg: Option[String] = None): Unit = {
-    val spark = increment.sparkSession
-    val segName = seg.getOrElse(
-      "append-" + java.util.UUID.randomUUID().toString.take(8))
-    if (Segments.isCommitted(spark, dir, segName)) return
-    val nassign = spark.read.parquet(s"$dir/meta").head().getAs[Int]("nassign")
-    val cents = spark.read.parquet(s"$dir/centroids")
-      .orderBy("cell").collect().map(_.getSeq[Float](1).toArray)
-    val v = increment.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    Segments.writePart(
-      v.select(col("id"), col("vec"),
-        explode(nearestCells(col("vec"), cents, nassign)).as("cell")),
-      dir, "assigned", segName)
-    Segments.writePart(v, dir, "vecs", segName)
-    Segments.commit(spark, dir, segName)
+      seg: Option[String] = None): Unit = CacheScope.scoped {
+    val (v, assigned) = semanticFrames(increment, dir, idCol, vecCol)
+    Segments.append(increment.sparkSession, dir, seg, semanticLayout, Seq(assigned, v))
   }
 
   /** Quantizer DRIFT audit for a [[writeSemanticIndex]] directory: for
@@ -1445,8 +1386,7 @@ object Dedup {
     val inc = ScaleOut(increment.select(col(idCol).as("id"), col(vecCol).as("vec")))
     val incBase = Ann.withBuckets(inc, "vec", planes, tables, dim, seed)
       .select("id", "table", "bucket")
-    embeddingPairsFromKernel(spark, dir, inc, incBase,
-      planes, tables, dim, seed, threshold, probeRadius)
+    embeddingPairsFromKernel(spark, dir, inc, incBase, threshold, probeRadius)
   }
 
   /** Memoized like [[minhashMeta]] (written once at build, immutable
@@ -1465,13 +1405,13 @@ object Dedup {
 
   /** [[incrementalEmbeddingNearDupPairs]] past the radius-0 signatures:
     * probe with an ALREADY-COMPUTED base bucket frame, so the streaming
-    * ingest ([[embeddingIngestBatch]]) shares it with the segment append
+    * ingest ([[embeddingIngestKernel]]) shares it with the segment append
     * instead of hashing the batch twice.
     */
   private def embeddingPairsFromKernel(
       spark: SparkSession, dir: String, inc: DataFrame, incBase: DataFrame,
-      planes: Int, tables: Int, dim: Int, seed: Long,
       threshold: Double, probeRadius: Int): DataFrame = {
+    val (planes, tables, dim, seed) = embeddingMeta(spark, dir)
     val incProbed = Ann.withBuckets(inc, "vec", planes, tables, dim, seed, probeRadius)
       .select("id", "table", "bucket")
     // base side = corpus buckets ∪ increment's radius-0 buckets; the
@@ -1500,35 +1440,37 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
   }
 
-  /** One streaming-ingest micro-batch against a [[writeEmbeddingIndex]]
-    * directory, KERNEL-FUSED like [[minhashIngestBatch]]: the batch's
-    * radius-0 bucket signatures are computed once and shared by the
-    * probe and the segment append, and the index meta is read once per
-    * batch instead of twice. Contracts unchanged (committed segments skip
-    * whole — EmbeddingIngestStreamSpec); the pair write and the two
-    * segment-part writes are submitted concurrently (§2.6) under the same
-    * invariance argument as [[minhashIngestBatch]].
+  private val embeddingLayout: Segments.Layout = Seq("buckets" -> Nil, "vecs" -> Nil)
+
+  /** The increment's (id, vec) rows, their widened form ([[ScaleOut]]),
+    * and their pinned radius-0 bucket rows at the index's meta parameters
+    * — computed once per batch and shared by the probe and the segment
+    * parts.
     */
-  def embeddingIngestBatch(
-      spark: SparkSession, indexDir: String, batch: DataFrame,
-      idCol: String, vecCol: String, threshold: Double, probeRadius: Int,
-      segName: String, writePairs: DataFrame => Unit): Unit = CacheScope.scoped {
-    val (planes, tables, dim, seed) = embeddingMeta(spark, indexDir)
-    val v = batch.select(col(idCol).as("id"), col(vecCol).as("vec"))
+  private def embeddingFrames(increment: DataFrame, dir: String,
+      idCol: String, vecCol: String): (DataFrame, DataFrame, DataFrame) = {
+    val (planes, tables, dim, seed) = embeddingMeta(increment.sparkSession, dir)
+    val v = increment.select(col(idCol).as("id"), col(vecCol).as("vec"))
     val inc = ScaleOut(v)
-    val incBase = CacheScope.pin(
+    val buckets = CacheScope.pin(
       Ann.withBuckets(inc, "vec", planes, tables, dim, seed)
         .select("id", "table", "bucket"),
       StorageLevel.MEMORY_AND_DISK)
-    val pairs = embeddingPairsFromKernel(spark, indexDir, inc, incBase,
-      planes, tables, dim, seed, threshold, probeRadius)
-    if (Segments.isCommitted(spark, indexDir, segName)) writePairs(pairs)
-    else {
-      ConcurrentJobs.awaitAll(
-        () => Segments.writePart(incBase, indexDir, "buckets", segName),
-        () => Segments.writePart(v, indexDir, "vecs", segName),
-        () => writePairs(pairs))
-      Segments.commit(spark, indexDir, segName)
-    }
+    (v, inc, buckets)
   }
+
+  /** The embedding index's ingest kernel ([[graft.streaming.IndexIngest]]):
+    * a batch's bucket and vector parts plus its touching pairs
+    * ([[incrementalEmbeddingNearDupPairs]] at probe radius 1 over the
+    * shared radius-0 buckets).
+    */
+  def embeddingIngestKernel(
+      dir: String, idCol: String, vecCol: String,
+      threshold: Double): graft.streaming.IndexIngest.Kernel =
+    graft.streaming.IndexIngest.Kernel(dir, embeddingLayout, { batch =>
+      val (v, inc, buckets) = embeddingFrames(batch, dir, idCol, vecCol)
+      (Seq(buckets, v),
+        embeddingPairsFromKernel(batch.sparkSession, dir, inc, buckets,
+          threshold, probeRadius = 1))
+    })
 }

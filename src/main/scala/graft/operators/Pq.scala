@@ -280,43 +280,49 @@ object Pq {
     * whichever the index was built with — nothing retrains; codebook
     * drift across a long append history is the documented rebuild
     * trigger, observable the same way as [[Dedup.semanticDrift]]), and
-    * commit codes + vecs as one [[Segments]] segment — the maintenance
+    * commit codes + vecs as one [[Segments.append]] — the maintenance
     * contract of the other three persisted indexes, completing the set.
     */
   def appendToIvfPqIndex(
       increment: DataFrame, dir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       seg: Option[String] = None): Unit = {
-    val spark = increment.sparkSession
-    appendToIvfPqIndexWith(loadIvfPqState(spark, dir), increment, dir, idCol, vecCol, seg)
+    val st = loadIvfPqState(increment.sparkSession, dir)
+    Segments.append(increment.sparkSession, dir, seg, ivfPqLayout,
+      ivfPqParts(st, increment, idCol, vecCol))
   }
 
-  /** [[appendToIvfPqIndex]] with ALREADY-LOADED quantizer state, so the
-    * streaming ingest shares one driver read per batch with the search
-    * ([[ivfPqIngestBatch]]).
+  private val ivfPqLayout: Segments.Layout = Seq("codes" -> Seq("cell"), "vecs" -> Nil)
+
+  /** The increment's segment parts: codes (stored-cell assignment,
+    * stored-book encoding, partitioned by cell) and the raw vectors.
     */
-  def appendToIvfPqIndexWith(
-      st: IvfPqState, increment: DataFrame, dir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      seg: Option[String] = None): Unit = {
-    val spark = increment.sparkSession
-    val segName = seg.getOrElse(
-      "append-" + java.util.UUID.randomUUID().toString.take(8))
-    if (Segments.isCommitted(spark, dir, segName)) return
+  private def ivfPqParts(st: IvfPqState, increment: DataFrame,
+      idCol: String, vecCol: String): Seq[DataFrame] = {
     val v = increment.select(col(idCol).as("id"), col(vecCol).as("vec"))
     val enc = encodeInput(
       v.withColumn("cell", element_at(nearestCells(col("vec"), st.cents, 1), 1)),
       st.cellMeans, st.byResidual)
-    // the two part writes are independent (separate dirs, separate
-    // sources; the marker commit below is the only publish point) —
-    // submit them concurrently (§2.6, [[ConcurrentJobs]])
-    ConcurrentJobs.awaitAll(
-      () => Segments.writePart(
-        enc.select(col("id").as("neighbor_id"),
-          pqEncode(col("evec"), st.books, st.dsub).as("codes"), col("cell")),
-        dir, "codes", segName, partitionBy = Seq("cell")),
-      () => Segments.writePart(v, dir, "vecs", segName))
-    Segments.commit(spark, dir, segName)
+    Seq(enc.select(col("id").as("neighbor_id"),
+        pqEncode(col("evec"), st.books, st.dsub).as("codes"), col("cell")),
+      v)
+  }
+
+  /** The IVF+PQ index's ingest kernel ([[graft.streaming.IndexIngest]]):
+    * a batch's code and vector parts plus its top-k matches
+    * ([[searchIvfPqIndex]], the batch's own ids excluded — the replay
+    * invariance). The quantizer state is loaded here, once per kernel:
+    * it is immutable after the build, so a draining stream pays no
+    * per-batch quantizer reads.
+    */
+  def ivfPqIngestKernel(
+      spark: SparkSession, dir: String, idCol: String, vecCol: String,
+      k: Int, nprobe: Int): graft.streaming.IndexIngest.Kernel = {
+    val st = loadIvfPqState(spark, dir)
+    graft.streaming.IndexIngest.Kernel(dir, ivfPqLayout, batch =>
+      (ivfPqParts(st, batch, idCol, vecCol),
+        searchIvfPqIndexWith(st, batch.sparkSession, dir, batch, k, idCol, vecCol,
+          nprobe, excludeIds = Some(batch.select(col(idCol))))))
   }
 
   /** Driver-resident quantizer state of a [[writeIvfPqIndex]] directory —
@@ -373,7 +379,7 @@ object Pq {
       idCol, vecCol, nprobe, shortlistFactor, excludeIds)
 
   /** [[searchIvfPqIndex]] with ALREADY-LOADED quantizer state (see
-    * [[ivfPqIngestBatch]]).
+    * [[ivfPqIngestKernel]]).
     */
   def searchIvfPqIndexWith(
       st: IvfPqState, spark: SparkSession, dir: String, queries: DataFrame,

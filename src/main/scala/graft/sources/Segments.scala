@@ -20,20 +20,23 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   dir/segs/_commits/<seg>    marker file; content = superseded segs
   * }}}
   *
-  * The contract, in order:
-  *  1. [[writePart]] every part of the segment (`overwrite` — a replayed
-  *     or re-crashed attempt REWRITES its own partial output instead of
-  *     appending beside it);
-  *  2. [[commit]] the segment: the marker is written to a scratch name
-  *     and RENAMED into place — one atomic filesystem operation is the
-  *     entire commit. Readers ([[readPart]]) see base + COMMITTED
-  *     segments only, so a crash at any earlier point leaves the index
-  *     exactly as it was.
-  *
-  * Idempotent replay is the caller's fast path: a deterministic segment
-  * name (e.g. `batch-<id>` from a streaming checkpoint) that
-  * [[isCommitted]] says is already applied is SKIPPED whole — the
-  * at-least-once upstream becomes exactly-once downstream.
+  * [[append]] is the one entry point that writes a segment, in order:
+  *  1. validate the segment name — before anything touches the disk,
+  *     so an empty or path-like name can never overwrite a whole part
+  *     dir or land outside the segment tree;
+  *  2. if the segment is already committed, run only the caller's
+  *     `alongside` action: the replay path of a deterministic name
+  *     (e.g. `batch-<id>` from a streaming checkpoint) — the segment is
+  *     skipped whole, and the at-least-once upstream becomes
+  *     exactly-once downstream;
+  *  3. otherwise write every part (`overwrite` — a replayed or
+  *     re-crashed attempt REWRITES its own partial output instead of
+  *     appending beside it) and `alongside`, all concurrently
+  *     ([[graft.operators.ConcurrentJobs]]);
+  *  4. commit: the marker is written to a scratch name and RENAMED into
+  *     place — one atomic filesystem operation is the entire commit.
+  *     Readers ([[readPart]]) see base + COMMITTED segments only, so a
+  *     crash at any earlier point leaves the index exactly as it was.
   *
   * [[compact]] bounds the file/segment count an ingest loop accretes:
   * live segments merge into one `compact-<n>` segment whose marker lists
@@ -45,7 +48,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * under a table format's transaction instead).
   *
   * Single-writer by design: one ingest owns an index directory (the
-  * [[graft.streaming.MinhashIngestStream]] deployment contract); the
+  * [[graft.streaming.IndexIngest]] deployment contract); the
   * protocol defends against CRASHES and REPLAYS of that writer, not
   * against two concurrent writers racing commits.
   */
@@ -58,8 +61,17 @@ object Segments {
 
   private def commitsPath(root: Path) = new Path(root, "segs/_commits")
 
+  /** An index's declared parts: part name -> Hive partition columns.
+    * [[append]] writes one frame per entry, [[compact]] merges them.
+    */
+  type Layout = Seq[(String, Seq[String])]
+
+  private def requireName(seg: String): Unit =
+    require(seg.nonEmpty && !seg.startsWith(".") && !seg.startsWith("_") &&
+      !seg.contains("/"), s"invalid segment name: $seg")
+
   /** True iff `seg`'s marker exists — the replay fast path. */
-  def isCommitted(spark: SparkSession, dir: String, seg: String): Boolean = {
+  private[sources] def isCommitted(spark: SparkSession, dir: String, seg: String): Boolean = {
     val (fs, root) = fsFor(spark, dir)
     fs.exists(new Path(commitsPath(root), seg))
   }
@@ -67,9 +79,31 @@ object Segments {
   /** Overwrite-write one part of an (uncommitted) segment. */
   def writePart(df: DataFrame, dir: String, part: String, seg: String,
       partitionBy: Seq[String] = Nil): Unit = {
+    requireName(seg)
     val w = df.write.mode("overwrite")
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
       .parquet(s"$dir/segs/$part/$seg")
+  }
+
+  /** Append one segment: `frames` in `layout` order, plus `alongside`
+    * (the caller's own output write, rerun on replay) — the protocol in
+    * the object doc. `seg` defaults to a fresh `append-<uuid8>` name.
+    */
+  def append(spark: SparkSession, dir: String, seg: Option[String],
+      layout: Layout, frames: Seq[DataFrame],
+      alongside: () => Unit = () => ()): Unit = {
+    require(frames.size == layout.size,
+      s"${frames.size} frames for parts ${layout.map(_._1).mkString(",")}")
+    val name = seg.getOrElse("append-" + java.util.UUID.randomUUID().toString.take(8))
+    requireName(name)
+    if (isCommitted(spark, dir, name)) alongside()
+    else {
+      graft.operators.ConcurrentJobs.awaitAll(layout.zip(frames).map {
+        case ((part, partitionBy), df) =>
+          () => writePart(df, dir, part, name, partitionBy)
+      } :+ alongside: _*)
+      commit(spark, dir, name)
+    }
   }
 
   /** Atomically commit `seg`: write the marker (content = superseded
@@ -78,10 +112,9 @@ object Segments {
     * already present (a replay that lost the race with its own previous
     * attempt's rename) is left in place: same seg, same content.
     */
-  def commit(spark: SparkSession, dir: String, seg: String,
+  private[sources] def commit(spark: SparkSession, dir: String, seg: String,
       supersedes: Seq[String] = Nil): Unit = {
-    require(seg.nonEmpty && !seg.startsWith(".") && !seg.startsWith("_") &&
-      !seg.contains("/"), s"invalid segment name: $seg")
+    requireName(seg)
     val (fs, root) = fsFor(spark, dir)
     val commits = commitsPath(root)
     fs.mkdirs(commits)
@@ -135,10 +168,11 @@ object Segments {
     * reuses — and overwrites — the same name), commit it superseding
     * them, then best-effort delete the superseded data. No-op with fewer
     * than two live segments. The base part dirs are never touched.
-    * Returns the number of segments merged.
+    * Each merged part is written as ~64 MB files. Returns the number of
+    * segments merged.
     */
-  def compact(spark: SparkSession, dir: String,
-      parts: Seq[(String, Seq[String])], targetBytes: Long = 64L << 20): Int = {
+  def compact(spark: SparkSession, dir: String, parts: Layout): Int = {
+    val targetBytes = 64L << 20
     val (fs, root) = fsFor(spark, dir)
     val live = liveSegs(spark, dir)
     if (live.size < 2) return 0

@@ -1,42 +1,27 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Pq
-import graft.sources.Segments
 
-/** Streaming ANN ingest against a persisted IVF+PQ index — the search
-  * member of the ingest family ([[MinhashIngestStream]] /
-  * [[EmbeddingIngestStream]] / [[SemanticIngestStream]]): each
-  * micro-batch of vectors is FIRST searched against everything committed
-  * before it ([[Pq.searchIvfPqIndex]] — top-k neighbors with probed-cell
-  * partition pruning and ADC shortlisting), THEN appended
-  * ([[Pq.appendToIvfPqIndex]] — assign/encode with the STORED
-  * quantizers, one segment commit). With this, all four persisted
-  * vector/text indexes the engine maintains run as continuously-ingesting
-  * services with the same crash-replay and compaction contracts.
-  *
-  * This is the "index the stream as it arrives, surface what it matched"
+/** Streaming ANN ingest against a persisted IVF+PQ index: the
+  * [[IndexIngest]] skeleton over [[Pq.ivfPqIngestKernel]] — each batch
+  * of vectors is searched against everything committed before it (top-k
+  * with probed-cell partition pruning and ADC shortlisting, the batch's
+  * own ids excluded), then appended with the STORED quantizers. This is
+  * the "index the stream as it arrives, surface what it matched"
   * primitive (streaming retrieval feeds, dedup-adjacent triage,
-  * content-based routing). Unlike the dedup streams' threshold-pair
-  * probes, top-k search is NOT batch-boundary invisible — a query only
-  * sees neighbors committed BEFORE its batch, by design (its answer at
-  * ingest time). The determinism contract is instead per-batch: batch i's
-  * output equals a single-shot [[Pq.searchIvfPqIndex]] against the index
-  * holding corpus + batches 0..i-1 (AnnIngestStreamSpec pins this, plus
-  * the no-future-leakage direction).
+  * content-based routing).
   *
-  * Crash-replay idempotence: per-batch overwrite output sink +
-  * `batch-<id>` segment whose marker rename is the atomic publish — and
-  * the probe EXCLUDES the batch's own ids from the neighbor set, so a
-  * replay after the append committed (crash before the checkpoint
-  * commit) still searches exactly the pre-append neighbor set and
-  * rewrites identical output. Quantizers are never retrained on append;
-  * codebook drift is the documented rebuild trigger
-  * ([[graft.operators.Dedup.semanticDrift]] is the observable form).
+  * Unlike the dedup streams' threshold-pair probes, top-k search is NOT
+  * batch-boundary invisible — a query only sees neighbors committed
+  * BEFORE its batch, by design (its answer at ingest time). The
+  * determinism contract is instead per-batch: batch i's output equals a
+  * single-shot [[Pq.searchIvfPqIndex]] against the index holding corpus
+  * + batches 0..i-1 (AnnIngestStreamSpec pins this, plus the
+  * no-future-leakage direction). Quantizers are never retrained on
+  * append, and their state is loaded once per drain.
   *
   * Scale shape per batch: batch cell-assignments and ADC tables
   * broadcast, the code scan prunes to probed cells at the file listing,
@@ -45,43 +30,8 @@ import graft.sources.Segments
   */
 object AnnIngestStream {
 
-  /** One micro-batch: search FIRST (against everything committed before
-    * this batch, own ids excluded), append SECOND. Public so crash-replay
-    * tests can drive and interrupt it directly.
-    */
-  def ingestBatch(
-      batch: DataFrame, batchId: Long, indexDir: String, outDir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      k: Int = 5, nprobe: Int = 4,
-      compactEvery: Int = 0, compactTargetBytes: Long = 64L << 20,
-      state: Option[Pq.IvfPqState] = None): Unit =
-    graft.operators.CacheScope.scoped {
-      // quantizer state (meta/books/centroids/cell-means driver reads) is
-      // loaded ONCE and shared by search and append — it is immutable
-      // after the build (appends never retrain), and each call previously
-      // re-collected it; a draining stream loads it once per STREAM and
-      // passes it here, so per-batch cost carries no quantizer reads at all
-      val st = state.getOrElse(Pq.loadIvfPqState(batch.sparkSession, indexDir))
-      // search plan constructed BEFORE the fan-out: its code/vec listing
-      // freezes here, so the concurrent append cannot influence it — and
-      // the search result is append-invariant anyway (own ids excluded;
-      // the post-commit crash-replay case the spec pins). Search write
-      // and segment append then run concurrently (§2.6).
-      val matches = Pq.searchIvfPqIndexWith(st, batch.sparkSession, indexDir,
-        batch, k, idCol, vecCol, nprobe,
-        excludeIds = Some(batch.select(col(idCol))))
-      graft.operators.ConcurrentJobs.awaitAll(
-        () => Pq.appendToIvfPqIndexWith(st, batch, indexDir, idCol, vecCol,
-          seg = Some(s"batch-$batchId")),
-        () => matches.write.mode("overwrite").parquet(s"$outDir/batch=$batchId"))
-      if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-        Segments.compact(batch.sparkSession, indexDir,
-          Seq("codes" -> Seq("cell"), "vecs" -> Nil), compactTargetBytes)
-      ()
-    }
-
   /** Drain `feedDir` (parquet file stream of (idCol, vecCol) rows) into
-    * `indexDir`, writing each batch's top-k matches to `outDir`. Returns
+    * `indexDir`, writing each batch's top-k matches to `outDir`; returns
     * the accumulated (query_id, rank, neighbor_id, cosine) matches.
     */
   def ingest(
@@ -89,22 +39,8 @@ object AnnIngestStream {
       indexDir: String, outDir: String, checkpointDir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       k: Int = 5, nprobe: Int = 4,
-      maxFilesPerTrigger: Option[Int] = None,
-      compactEvery: Int = 0, compactTargetBytes: Long = 64L << 20): DataFrame = {
-    var reader = spark.readStream.schema(feedSchema)
-    maxFilesPerTrigger.foreach(m => reader = reader.option("maxFilesPerTrigger", m))
-    // immutable after the index build — load once for the whole drain
-    val st = Pq.loadIvfPqState(spark, indexDir)
-    val query = reader.parquet(feedDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, indexDir, outDir, idCol, vecCol,
-          k, nprobe, compactEvery, compactTargetBytes, state = Some(st))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.read.parquet(outDir).drop("batch")
-  }
+      maxFilesPerTrigger: Option[Int] = None, compactEvery: Int = 0): DataFrame =
+    IndexIngest.drain(spark, feedDir, feedSchema, outDir, checkpointDir,
+      maxFilesPerTrigger, compactEvery,
+      Pq.ivfPqIngestKernel(spark, indexDir, idCol, vecCol, k, nprobe))
 }

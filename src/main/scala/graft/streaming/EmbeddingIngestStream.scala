@@ -1,30 +1,19 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Dedup
-import graft.sources.Segments
 
-/** Streaming near-dup ingest against a persisted EMBEDDING index — the
-  * hyperplane-LSH mirror of [[MinhashIngestStream]], driving
-  * [[Dedup.incrementalEmbeddingNearDupPairs]] (probe) and
-  * [[Dedup.appendToEmbeddingIndex]] (segment-committed append) as one
-  * running operator, so the q78-shape incremental embedding dedup is a
-  * continuously-maintained service, not a per-ingest batch job.
-  *
-  * Same contracts as the MinHash ingest, proven the same ways:
-  * batch-boundary invisibility (drained == single-shot
-  * [[Dedup.incrementalEmbeddingNearDupPairs]] over the whole increment —
-  * q95's oracle and EmbeddingIngestStreamSpec, with a cross-batch pair
-  * planted across batches 1 and 3), crash-replay idempotence (per-batch
-  * overwrite pair sink + `batch-<id>` segment whose marker rename is the
-  * atomic publish; replayed probes resolve ids in the increment's favor,
-  * so a post-commit replay rewrites identical output), and bounded file
-  * accretion (`compactEvery` folds live segments mid-stream,
-  * probe-transparent). Callers ingest into a per-run COPY of a staged
-  * index — the index mutates by design.
+/** Streaming near-dup ingest against a persisted EMBEDDING
+  * (hyperplane-LSH) index: the [[IndexIngest]] skeleton over
+  * [[Dedup.embeddingIngestKernel]], so the q78-shape incremental
+  * embedding dedup is a continuously-maintained service, not a
+  * per-ingest batch job. Batch boundaries are invisible, as in
+  * [[MinhashIngestStream]]: drained == single-shot
+  * [[Dedup.incrementalEmbeddingNearDupPairs]] over the whole increment
+  * (q95's oracle; EmbeddingIngestStreamSpec plants a cross-batch pair
+  * across batches 1 and 3). The probe runs at multi-probe radius 1.
   *
   * Scale shape per batch: the batch's signatures broadcast, the stored
   * bucket index streams wide ([[graft.operators.ScaleOut]] inside the
@@ -34,49 +23,17 @@ import graft.sources.Segments
   */
 object EmbeddingIngestStream {
 
-  /** One micro-batch: probe FIRST (against everything committed before
-    * this batch), append SECOND. Public so crash-replay tests can drive
-    * and interrupt it directly.
-    */
-  def ingestBatch(
-      batch: DataFrame, batchId: Long, indexDir: String, outDir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      threshold: Double = 0.95, probeRadius: Int = 1,
-      compactEvery: Int = 0, compactTargetBytes: Long = 64L << 20): Unit = {
-    // kernel-fused probe + append ([[Dedup.embeddingIngestBatch]]): the
-    // batch's radius-0 signatures are computed once for both
-    Dedup.embeddingIngestBatch(batch.sparkSession, indexDir, batch,
-      idCol, vecCol, threshold, probeRadius, segName = s"batch-$batchId",
-      writePairs =
-        _.write.mode("overwrite").parquet(s"$outDir/batch=$batchId"))
-    if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-      Segments.compact(batch.sparkSession, indexDir,
-        Seq("buckets" -> Nil, "vecs" -> Nil), compactTargetBytes)
-  }
-
   /** Drain `feedDir` (parquet file stream of (idCol, vecCol) rows) into
-    * `indexDir`, writing each batch's touching pairs to `outDir`.
-    * Returns the accumulated pairs.
+    * `indexDir`, writing each batch's touching pairs to `outDir`; returns
+    * the accumulated pairs.
     */
   def ingest(
       spark: SparkSession, feedDir: String, feedSchema: StructType,
       indexDir: String, outDir: String, checkpointDir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      threshold: Double = 0.95, probeRadius: Int = 1,
-      maxFilesPerTrigger: Option[Int] = None,
-      compactEvery: Int = 0, compactTargetBytes: Long = 64L << 20): DataFrame = {
-    var reader = spark.readStream.schema(feedSchema)
-    maxFilesPerTrigger.foreach(m => reader = reader.option("maxFilesPerTrigger", m))
-    val query = reader.parquet(feedDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, indexDir, outDir, idCol, vecCol,
-          threshold, probeRadius, compactEvery, compactTargetBytes)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.read.parquet(outDir).drop("batch")
-  }
+      threshold: Double = 0.95,
+      maxFilesPerTrigger: Option[Int] = None, compactEvery: Int = 0): DataFrame =
+    IndexIngest.drain(spark, feedDir, feedSchema, outDir, checkpointDir,
+      maxFilesPerTrigger, compactEvery,
+      Dedup.embeddingIngestKernel(indexDir, idCol, vecCol, threshold))
 }

@@ -1,20 +1,15 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Dedup
-import graft.sources.Segments
 
 /** Streaming near-dup ingest against a persisted MinHash index — the
   * "keep the index current" half of [[Dedup.writeMinhashIndex]]'s
-  * deployment contract as a RUNNING operator, not a comment: each
-  * micro-batch of arriving documents (a) probes the index for pairs
-  * touching the batch and (b) APPENDS its own bucket/set rows
-  * ([[Dedup.appendToMinhashIndex]]), so every later batch's probe sees
-  * everything ingested before it.
+  * deployment contract as a RUNNING operator: the [[IndexIngest]]
+  * skeleton over [[Dedup.minhashIngestKernel]] (each batch's touching
+  * pairs, then its bucket/set segment).
   *
   * Batch boundaries are invisible in the result: a pair (x in batch N,
   * y in batch M > N) forms exactly once — during M, whose probe side
@@ -27,86 +22,23 @@ import graft.sources.Segments
   * [[Dedup.incrementalNearDupPairs]] over the whole increment (q92's
   * oracle and MinhashIngestStreamSpec pin the equality).
   *
-  * CRASH-REPLAY IDEMPOTENT end to end (the r8 verdict's one `weak`,
-  * closed): Structured Streaming re-runs a batch whenever a crash lands
-  * between the batch's side effects and its checkpoint commit, so both
-  * effects converge under re-execution —
-  *
-  *   - the pair output OVERWRITES a per-batch directory
-  *     (`outDir/batch=<id>`), the same keyed-overwrite protocol as
-  *     [[EventStreams.idempotentAppendBatchKeyed]]: a replay rewrites
-  *     its own partial files instead of appending beside them;
-  *   - the index append is a [[Segments]] segment named `batch-<id>`
-  *     whose marker rename is the atomic publish — a replay of a
-  *     committed batch skips the append whole, and a crash between the
-  *     bucket and set writes leaves NOTHING visible to probes;
-  *   - a replayed probe is deterministic even when the crash happened
-  *     AFTER the index append committed: the probe resolves ids in the
-  *     increment's favor (its candidate `distinct` and anti-joined
-  *     verification sets collapse the batch's own already-appended rows),
-  *     so the rewritten pair output is identical — the spec kills the
-  *     loop at each boundary and pins the converged state.
-  *
-  * The index MUTATES — that is the point — so callers ingest into a
-  * per-run COPY of a staged index, never a shared stage itself.
-  *
   * Scale shape: per batch, probe cost is the q70 shape (batch broadcasts,
   * index streams) and the append writes batch-sized files; the index
   * grows by exactly the ingested rows, and nothing ever rewrites or
-  * re-shuffles the corpus side. `compactEvery` folds the accreted
-  * segments into one every N batches ([[Segments.compact]] — marker-
-  * committed, probe-transparent), so a long-running ingest's file count
-  * and probe plan width stay bounded instead of growing forever.
+  * re-shuffles the corpus side.
   */
 object MinhashIngestStream {
 
-  /** One micro-batch of the ingest loop — public so a crash-replay test
-    * can drive (and interrupt) it directly. Probe FIRST (against
-    * everything committed before this batch), append SECOND — the
-    * ordering that makes each pair form once.
-    */
-  def ingestBatch(
-      batch: DataFrame, batchId: Long, indexDir: String, outDir: String,
-      idCol: String = "doc_id", textCol: String = "text",
-      threshold: Double = 0.8,
-      compactEvery: Int = 0, compactTargetBytes: Long = 64L << 20): Unit = {
-    // kernel-fused probe + append ([[Dedup.minhashIngestBatch]]): the
-    // batch's shingle sets and buckets are computed once for both
-    Dedup.minhashIngestBatch(batch.sparkSession, indexDir, batch,
-      idCol, textCol, threshold, segName = s"batch-$batchId",
-      writePairs =
-        _.write.mode("overwrite").parquet(s"$outDir/batch=$batchId"))
-    if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-      Segments.compact(batch.sparkSession, indexDir,
-        Seq("buckets" -> Nil, "sets" -> Nil), compactTargetBytes)
-  }
-
-  /** Drain `feedDir` (parquet file stream; `maxFilesPerTrigger` controls
-    * micro-batch granularity) into `indexDir`, writing each batch's
-    * touching pairs to `outDir`. Returns the accumulated pairs, read
-    * back sorted-stable for deterministic comparison.
+  /** Drain `feedDir` into `indexDir`, writing each batch's touching pairs
+    * to `outDir`; returns the accumulated pairs.
     */
   def ingest(
       spark: SparkSession, feedDir: String, feedSchema: StructType,
       indexDir: String, outDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
       threshold: Double = 0.8,
-      maxFilesPerTrigger: Option[Int] = None,
-      compactEvery: Int = 0, compactTargetBytes: Long = 64L << 20): DataFrame = {
-    var reader = spark.readStream.schema(feedSchema)
-    maxFilesPerTrigger.foreach(m => reader = reader.option("maxFilesPerTrigger", m))
-    val query = reader.parquet(feedDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, indexDir, outDir, idCol, textCol,
-          threshold, compactEvery, compactTargetBytes)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    // drop the batch partition column: an execution artifact of the
-    // idempotent per-batch sink, not part of the pair schema
-    spark.read.parquet(outDir).drop("batch")
-  }
+      maxFilesPerTrigger: Option[Int] = None, compactEvery: Int = 0): DataFrame =
+    IndexIngest.drain(spark, feedDir, feedSchema, outDir, checkpointDir,
+      maxFilesPerTrigger, compactEvery,
+      Dedup.minhashIngestKernel(indexDir, idCol, textCol, threshold))
 }

@@ -1,28 +1,17 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Dedup
-import graft.sources.Segments
 
-/** Streaming near-dup ingest against a persisted SEMANTIC index — the
-  * k-means-cell member of the ingest family
-  * ([[MinhashIngestStream]]/[[EmbeddingIngestStream]]), driving
-  * [[Dedup.incrementalSemanticNearDupPairs]] (probe) and
-  * [[Dedup.appendToSemanticIndex]] (segment-committed append) as one
-  * running operator. With this, every persisted dedup index the engine
-  * maintains (MinHash, hyperplane-LSH, semantic cells) has the same
-  * continuously-running ingest shape.
-  *
-  * Same contracts, proven the same ways: batch-boundary invisibility
-  * (drained == single-shot probe over the whole increment —
-  * SemanticIngestStreamSpec plants the cross-batch pair across batches 1
-  * and 3), crash-replay idempotence (per-batch overwrite pair sink +
-  * `batch-<id>` segment whose marker rename is the atomic publish), and
-  * bounded file accretion (`compactEvery`). Callers ingest into a
-  * per-run COPY of a staged index — the index mutates by design.
+/** Streaming near-dup ingest against a persisted SEMANTIC (k-means cell)
+  * index: the [[IndexIngest]] skeleton over
+  * [[Dedup.semanticIngestKernel]]. Batch boundaries are invisible, as in
+  * [[MinhashIngestStream]]: drained == single-shot
+  * [[Dedup.incrementalSemanticNearDupPairs]] over the whole increment
+  * (q100's oracle; SemanticIngestStreamSpec plants the cross-batch pair
+  * across batches 1 and 3).
   *
   * The quantizer is NOT retrained on append (the stored centroids assign
   * every batch); codebook drift is the rebuild trigger, observable via
@@ -36,50 +25,17 @@ import graft.sources.Segments
   */
 object SemanticIngestStream {
 
-  /** One micro-batch: probe FIRST (against everything committed before
-    * this batch), append SECOND. Public so crash-replay tests can drive
-    * and interrupt it directly.
-    */
-  def ingestBatch(
-      batch: DataFrame, batchId: Long, indexDir: String, outDir: String,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      threshold: Double = 0.95,
-      compactEvery: Int = 0, compactTargetBytes: Long = 64L << 20): Unit = {
-    // kernel-fused probe + append ([[Dedup.semanticIngestBatch]]): the
-    // batch's cell assignments and the driver-side centroid read are
-    // computed once for both
-    Dedup.semanticIngestBatch(batch.sparkSession, indexDir, batch,
-      idCol, vecCol, threshold, segName = s"batch-$batchId",
-      writePairs =
-        _.write.mode("overwrite").parquet(s"$outDir/batch=$batchId"))
-    if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-      Segments.compact(batch.sparkSession, indexDir,
-        Seq("assigned" -> Nil, "vecs" -> Nil), compactTargetBytes)
-  }
-
   /** Drain `feedDir` (parquet file stream of (idCol, vecCol) rows) into
-    * `indexDir`, writing each batch's touching pairs to `outDir`.
-    * Returns the accumulated pairs.
+    * `indexDir`, writing each batch's touching pairs to `outDir`; returns
+    * the accumulated pairs.
     */
   def ingest(
       spark: SparkSession, feedDir: String, feedSchema: StructType,
       indexDir: String, outDir: String, checkpointDir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
       threshold: Double = 0.95,
-      maxFilesPerTrigger: Option[Int] = None,
-      compactEvery: Int = 0, compactTargetBytes: Long = 64L << 20): DataFrame = {
-    var reader = spark.readStream.schema(feedSchema)
-    maxFilesPerTrigger.foreach(m => reader = reader.option("maxFilesPerTrigger", m))
-    val query = reader.parquet(feedDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, indexDir, outDir, idCol, vecCol,
-          threshold, compactEvery, compactTargetBytes)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    spark.read.parquet(outDir).drop("batch")
-  }
+      maxFilesPerTrigger: Option[Int] = None, compactEvery: Int = 0): DataFrame =
+    IndexIngest.drain(spark, feedDir, feedSchema, outDir, checkpointDir,
+      maxFilesPerTrigger, compactEvery,
+      Dedup.semanticIngestKernel(indexDir, idCol, vecCol, threshold))
 }

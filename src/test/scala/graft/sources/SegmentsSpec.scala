@@ -147,4 +147,57 @@ class SegmentsSpec extends SparkTestBase {
     Segments.commit(spark, dir, "inflight")
     assert(rows(dir, "data").contains((9L, "x")))
   }
+
+  /** Base + two committed two-part segments, through [[Segments.append]]. */
+  private val twoParts: Segments.Layout = Seq("data" -> Nil, "keys" -> Nil)
+
+  private def committedIndex(tag: String): String = {
+    val dir = tmp(tag)
+    writeBase(dir)
+    Seq((1L, "x")).toDF("id", "k").write.mode("overwrite").parquet(s"$dir/keys")
+    (0 until 2).foreach { i =>
+      Segments.append(spark, dir, Some(s"batch-$i"), twoParts,
+        Seq(Seq((10L + i, s"s$i")).toDF("id", "v"), Seq((10L + i, s"k$i")).toDF("id", "k")))
+    }
+    dir
+  }
+
+  private def segCounts(dir: String): Map[(String, String), Long] =
+    (for { (part, _) <- twoParts; seg <- Seq("batch-0", "batch-1") }
+      yield (part, seg) -> spark.read.parquet(s"$dir/segs/$part/$seg").count()).toMap
+
+  Seq("" -> "empty", "../x" -> "path-like").foreach { case (bad, kind) =>
+    test(s"$kind segment name is rejected before any write; committed segments intact") {
+      val dir = committedIndex("badname")
+      val before = segCounts(dir)
+      assert(before.values.forall(_ == 1L))
+      val bad99 = Seq((99L, "bad")).toDF("id", "v")
+      intercept[IllegalArgumentException] {
+        Segments.append(spark, dir, Some(bad), twoParts,
+          Seq(bad99, Seq((99L, "bad")).toDF("id", "k")))
+      }
+      // the part writer itself refuses too: an overwrite of
+      // `segs/data/<bad>` would replace the whole part's segment tree
+      intercept[IllegalArgumentException] {
+        Segments.writePart(bad99, dir, "data", bad)
+      }
+      assert(segCounts(dir) === before)
+      assert(Segments.liveSegs(spark, dir) === Seq("batch-0", "batch-1"))
+      assert(rows(dir, "data") === Set((1L, "a"), (2L, "b"), (10L, "s0"), (11L, "s1")))
+      assert(!new java.io.File(s"$dir/segs/x").exists(),
+        "a path-like name wrote outside the segment tree")
+    }
+  }
+
+  test("a readPart frame built before a commit keeps its frozen listing after it") {
+    val dir = committedIndex("frozen")
+    val planned = Segments.readPart(spark, dir, "data")
+    Segments.append(spark, dir, Some("batch-2"), twoParts,
+      Seq(Seq((12L, "s2")).toDF("id", "v"), Seq((12L, "k2")).toDF("id", "k")))
+    // the listing froze at construction: the concurrent part writes of an
+    // ingest batch cannot change what its already-built probe reads
+    assert(planned.collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
+      Set((1L, "a"), (2L, "b"), (10L, "s0"), (11L, "s1")))
+    assert(rows(dir, "data").contains((12L, "s2")))
+  }
 }

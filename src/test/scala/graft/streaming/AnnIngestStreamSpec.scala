@@ -3,17 +3,16 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
-import graft.SparkTestBase
 import graft.operators.Pq
-import graft.sources.Segments
 
 /** [[AnnIngestStream]] — per-batch output equals a single-shot
-  * [[Pq.searchIvfPqIndex]] against the hand-appended prefix index, a
+  * [[Pq.searchIvfPqIndex]] against the hand-appended prefix index, and a
   * later batch finds an earlier batch's vector (and NOT vice versa — the
-  * no-future-leakage direction), a post-commit replay rewrites identical
-  * output, and mid-stream compaction is search-transparent.
+  * no-future-leakage direction); the crash-replay and compaction cases
+  * come from [[IngestReplayMatrix]], whose single-shot reference is the
+  * hand-appended prefix search.
   */
-class AnnIngestStreamSpec extends SparkTestBase {
+class AnnIngestStreamSpec extends IngestReplayMatrix("match", ("code", "vector")) {
   import spark.implicits._
 
   private val dim = 64
@@ -32,7 +31,7 @@ class AnnIngestStreamSpec extends SparkTestBase {
     val v = new Array[Float](dim); v(i) = 1f; v.toSeq
   }
 
-  private val feedSchema = StructType(Seq(
+  protected val feedSchema = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType, containsNull = false))))
 
@@ -52,40 +51,65 @@ class AnnIngestStreamSpec extends SparkTestBase {
   private val b0 = Seq((100L, a(0, 0.014)))
   private val b1 = Seq((101L, a(1, 0.011)))
   private val b2 = Seq((102L, a(0, 0.015))) // cos(0.001) to 100 — its top-1
-  private val batches = Seq(b0, b1, b2)
+  private val feed = Seq(b0, b1, b2)
+  // the matrix's batch 0 carries a second vector, 104 at 0.034: on a
+  // post-commit replay it sits in the index within 100's top-3, so only
+  // the own-id exclusion keeps the replayed output identical. Its 4th
+  // batch lands back in cluster B, after the first mid-stream compaction
+  private val b3 = Seq((103L, a(1, 0.013)))
 
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_aingest_$tag").toString
-
-  private def freshIndex(): String = {
+  protected def freshIndex(): String = {
     val dir = tmp("idx")
     Pq.writeIvfPqIndex(corpus, dir, dim = dim, m = 8, ksub = 8, nlist = 4,
       iters = 3, seed = 42L)
     dir
   }
 
-  private def rows(df: DataFrame): Set[Seq[Any]] =
-    df.collect().map(_.toSeq).toSet
-
   private def search(dir: String, q: DataFrame): DataFrame =
     Pq.searchIvfPqIndex(spark, dir, q, k, nprobe = nprobe,
       excludeIds = Some(q.select("vec_id")))
+
+  protected lazy val batches: Seq[DataFrame] =
+    Seq(b0 :+ ((104L, a(0, 0.034))), b1, b2, b3).map(_.toDF("vec_id", "embedding"))
+  protected def kernel(indexDir: String) =
+    Pq.ivfPqIngestKernel(spark, indexDir, "vec_id", "embedding", k, nprobe)
+  protected def ingest(feedDir: String, indexDir: String, outDir: String,
+      checkpointDir: String, compactEvery: Int): DataFrame =
+    AnnIngestStream.ingest(spark, feedDir, feedSchema, indexDir, outDir,
+      checkpointDir, k = k, nprobe = nprobe, maxFilesPerTrigger = Some(1),
+      compactEvery = compactEvery)
+  /** Batch i searched against corpus + hand-appended batches 0..i-1. */
+  protected def singleShot(n: Int): Set[Seq[Any]] = {
+    val handIdx = freshIndex()
+    batches.take(n).zipWithIndex.flatMap { case (b, i) =>
+      val got = rowSet(search(handIdx, b))
+      Pq.appendToIvfPqIndex(b, handIdx, seg = Some(s"hand-$i"))
+      got
+    }.toSet
+  }
+  protected def probeLater(indexDir: String): Set[Seq[Any]] =
+    rowSet(search(indexDir, Seq((200L, a(0, 0.016))).toDF("vec_id", "embedding")))
+  protected val laterHit = 102L
+  // batch 2's 102 and batch 3's 103 find their cluster's earlier batch
+  // vector (100, 101) through the compacted segment
+  protected val compactedHits = Set((102L, 100L), (103L, 101L))
+  protected val hitColumns = ("query_id", "neighbor_id")
 
   test("per-batch stream output == single-shot search on the hand-appended prefix") {
     val streamIdx = freshIndex()
     val handIdx = freshIndex()
     val feedDir = tmp("feed")
     val outDir = tmp("out")
-    batches.foreach { b =>
+    feed.foreach { b =>
       b.toDF("vec_id", "embedding")
         .coalesce(1).write.mode("append").parquet(feedDir)
     }
     AnnIngestStream.ingest(spark, feedDir, feedSchema, streamIdx, outDir,
       tmp("ckpt"), k = k, nprobe = nprobe, maxFilesPerTrigger = Some(1))
-    batches.zipWithIndex.foreach { case (b, i) =>
+    feed.zipWithIndex.foreach { case (b, i) =>
       val bdf = b.toDF("vec_id", "embedding")
-      val expected = rows(search(handIdx, bdf))
-      val got = rows(spark.read.parquet(s"$outDir/batch=$i"))
+      val expected = rowSet(search(handIdx, bdf))
+      val got = rowSet(spark.read.parquet(s"$outDir/batch=$i"))
       assert(got === expected, s"batch $i diverged from single-shot search")
       Pq.appendToIvfPqIndex(bdf, handIdx, seg = Some(s"hand-$i"))
     }
@@ -94,9 +118,10 @@ class AnnIngestStreamSpec extends SparkTestBase {
   test("later batch finds the earlier batch's vector; no future leakage") {
     val indexDir = freshIndex()
     val outDir = tmp("out")
-    batches.zipWithIndex.foreach { case (b, i) =>
-      AnnIngestStream.ingestBatch(b.toDF("vec_id", "embedding"), i.toLong,
-        indexDir, outDir, k = k, nprobe = nprobe)
+    val ann = kernel(indexDir)
+    feed.zipWithIndex.foreach { case (b, i) =>
+      IndexIngest.ingestBatch(ann, b.toDF("vec_id", "embedding"), i.toLong, outDir,
+        compactEvery = 0)
     }
     val byBatch = (0 until 3).map(i =>
       spark.read.parquet(s"$outDir/batch=$i")
@@ -111,43 +136,10 @@ class AnnIngestStreamSpec extends SparkTestBase {
     assert(!byBatch(0).exists(_._2 == 101L), "batch 0 saw a future vector")
   }
 
-  test("post-commit batch replay rewrites identical output, no duplicate segment") {
-    val indexDir = freshIndex()
-    val outDir = tmp("out")
-    val bdf = b0.toDF("vec_id", "embedding")
-    AnnIngestStream.ingestBatch(bdf, 0L, indexDir, outDir, k = k, nprobe = nprobe)
-    val first = rows(spark.read.parquet(outDir).drop("batch"))
-    // checkpoint commit lost — the stream re-runs batch 0 against an
-    // index that already holds its rows; own-id exclusion keeps the
-    // neighbor set identical
-    AnnIngestStream.ingestBatch(bdf, 0L, indexDir, outDir, k = k, nprobe = nprobe)
-    assert(rows(spark.read.parquet(outDir).drop("batch")) === first)
-    assert(Segments.liveSegs(spark, indexDir) === Seq("batch-0"))
-  }
-
-  test("mid-stream compaction is search-transparent and bounds segments") {
-    val plain = freshIndex()
-    val compacted = freshIndex()
-    batches.zipWithIndex.foreach { case (b, i) =>
-      val bdf = b.toDF("vec_id", "embedding")
-      AnnIngestStream.ingestBatch(bdf, i.toLong, plain, tmp("o1"),
-        k = k, nprobe = nprobe)
-      AnnIngestStream.ingestBatch(bdf, i.toLong, compacted, tmp("o2"),
-        k = k, nprobe = nprobe, compactEvery = 2)
-    }
-    val probe = Seq((200L, a(0, 0.016))).toDF("vec_id", "embedding")
-    assert(rows(search(compacted, probe)) === rows(search(plain, probe)))
-    assert(Segments.liveSegs(spark, compacted).size
-      < Segments.liveSegs(spark, plain).size)
-    // the compacted index still answers through ingested vectors
-    val got = search(compacted, probe).select("neighbor_id")
-      .as[Long].collect().toSet
-    assert(got.contains(102L), s"compacted index lost an ingested vector: $got")
-  }
   test("job budget: the 3-batch compacting drain stays within the pinned job count") {
     val indexDir = freshIndex()
     val feedDir = tmp("feed")
-    batches.foreach { b =>
+    feed.foreach { b =>
       b.toDF("vec_id", "embedding")
         .coalesce(1).write.mode("append").parquet(feedDir)
     }

@@ -3,15 +3,15 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 
-import graft.SparkTestBase
 import graft.operators.Dedup
-import graft.sources.Segments
 
 /** [[EmbeddingIngestStream]] — drained == single-shot probe, the
-  * cross-batch pair planted across batches 1 and 3 is caught, the index
-  * grows, and a post-commit batch replay rewrites identical output.
+  * cross-batch pair planted across batches 1 and 3 is caught, and the
+  * index grows; the crash-replay and compaction cases come from
+  * [[IngestReplayMatrix]].
   */
-class EmbeddingIngestStreamSpec extends SparkTestBase {
+class EmbeddingIngestStreamSpec
+    extends IngestReplayMatrix("pair", ("bucket", "vector")) {
   import spark.implicits._
 
   private val dim = 64
@@ -32,7 +32,7 @@ class EmbeddingIngestStreamSpec extends SparkTestBase {
     v
   }
 
-  private val feedSchema = StructType(Seq(
+  protected val feedSchema = StructType(Seq(
     StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType, containsNull = false))))
 
@@ -45,11 +45,10 @@ class EmbeddingIngestStreamSpec extends SparkTestBase {
 
   private val inc = Seq(
     (100L, a(0.2).toSeq), (101L, axis(7).toSeq), (102L, a(0.4).toSeq))
+  // the matrix's 4th batch extends the chain (cos .980 vs 102)
+  private val inc4 = inc :+ ((103L, a(0.6).toSeq))
 
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_eingest_$tag").toString
-
-  private def freshIndex(): String = {
+  protected def freshIndex(): String = {
     val dir = tmp("idx")
     Dedup.writeEmbeddingIndex(corpus, dir)
     dir
@@ -58,10 +57,26 @@ class EmbeddingIngestStreamSpec extends SparkTestBase {
   private def pairSet(df: DataFrame): Set[(Long, Long)] =
     df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
-  private lazy val oneShotRows: Set[Seq[Any]] =
-    Dedup.incrementalEmbeddingNearDupPairs(
-        spark, freshIndex(), inc.toDF("vec_id", "embedding"), threshold = 0.95)
-      .collect().map(_.toSeq).toSet
+  protected lazy val batches: Seq[DataFrame] =
+    inc4.map(v => Seq(v).toDF("vec_id", "embedding"))
+  protected def kernel(indexDir: String) =
+    Dedup.embeddingIngestKernel(indexDir, "vec_id", "embedding", threshold = 0.95)
+  protected def ingest(feedDir: String, indexDir: String, outDir: String,
+      checkpointDir: String, compactEvery: Int): DataFrame =
+    EmbeddingIngestStream.ingest(spark, feedDir, feedSchema, indexDir, outDir,
+      checkpointDir, threshold = 0.95, maxFilesPerTrigger = Some(1),
+      compactEvery = compactEvery)
+  protected def singleShot(n: Int): Set[Seq[Any]] =
+    rowSet(Dedup.incrementalEmbeddingNearDupPairs(
+      spark, freshIndex(), inc4.take(n).toDF("vec_id", "embedding"), threshold = 0.95))
+  protected def probeLater(indexDir: String): Set[Seq[Any]] =
+    rowSet(Dedup.incrementalEmbeddingNearDupPairs(spark, indexDir,
+      Seq((200L, a(0.7).toSeq)).toDF("vec_id", "embedding"), threshold = 0.95))
+  protected val laterHit = 103L
+  // batch 2's 102 pairs with 100 through the compacted segment, batch 3's
+  // 103 with 102 in the segment written after it
+  protected val compactedHits = Set((100L, 102L), (102L, 103L))
+  protected val hitColumns = ("id_a", "id_b")
 
   test("3-batch drain == single-shot probe; cross-batch pair; index grows") {
     val indexDir = freshIndex()
@@ -73,7 +88,7 @@ class EmbeddingIngestStreamSpec extends SparkTestBase {
     val streamed = EmbeddingIngestStream.ingest(
       spark, feedDir, feedSchema, indexDir, tmp("out"), tmp("ckpt"),
       threshold = 0.95, maxFilesPerTrigger = Some(1))
-    assert(streamed.collect().map(_.toSeq).toSet === oneShotRows)
+    assert(rowSet(streamed) === reference(3))
     val got = pairSet(streamed)
     assert(got === Set((0L, 100L), (100L, 102L)),
       s"expected exactly the planted chain pairs, got $got")
@@ -87,24 +102,6 @@ class EmbeddingIngestStreamSpec extends SparkTestBase {
       s"index did not grow with the ingested batches: ${pairSet(second)}")
   }
 
-  test("post-commit batch replay rewrites identical output, no duplicate segment") {
-    val indexDir = freshIndex()
-    val outDir = tmp("out")
-    def b(i: Int): DataFrame = Seq(inc(i)).toDF("vec_id", "embedding")
-    EmbeddingIngestStream.ingestBatch(b(0), 0L, indexDir, outDir, threshold = 0.95)
-    val afterFirst = spark.read.parquet(outDir).drop("batch")
-      .collect().map(_.toSeq).toSet
-    // checkpoint commit lost — streaming re-runs batch 0 against an index
-    // that already holds its rows
-    EmbeddingIngestStream.ingestBatch(b(0), 0L, indexDir, outDir, threshold = 0.95)
-    assert(spark.read.parquet(outDir).drop("batch")
-      .collect().map(_.toSeq).toSet === afterFirst)
-    assert(Segments.liveSegs(spark, indexDir) === Seq("batch-0"))
-    EmbeddingIngestStream.ingestBatch(b(1), 1L, indexDir, outDir, threshold = 0.95)
-    EmbeddingIngestStream.ingestBatch(b(2), 2L, indexDir, outDir, threshold = 0.95)
-    assert(spark.read.parquet(outDir).drop("batch")
-      .collect().map(_.toSeq).toSet === oneShotRows)
-  }
   test("job budget: the 3-batch drain stays within the pinned job count") {
     val indexDir = freshIndex()
     val feedDir = tmp("feed")

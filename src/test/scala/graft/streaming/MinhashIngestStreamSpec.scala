@@ -3,22 +3,18 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.SparkTestBase
 import graft.operators.Dedup
-import graft.sources.Segments
 
 /** [[MinhashIngestStream]] — the streamed ingest must equal the
   * single-shot probe (batch boundaries invisible), catch pairs planted
-  * ACROSS micro-batches, leave the index genuinely grown (a later
-  * increment probes against what the stream appended), CONVERGE under
-  * crash-replay at every boundary of the batch body (the r8 verdict's
-  * `weak`), and keep its output identical with compaction interleaved
-  * mid-stream.
+  * ACROSS micro-batches, and leave the index genuinely grown (a later
+  * increment probes against what the stream appended); the crash-replay
+  * and compaction cases come from [[IngestReplayMatrix]].
   */
-class MinhashIngestStreamSpec extends SparkTestBase {
+class MinhashIngestStreamSpec extends IngestReplayMatrix("pair", ("bucket", "set")) {
   import spark.implicits._
 
-  private val feedSchema = StructType(Seq(
+  protected val feedSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType)))
 
   private val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
@@ -38,27 +34,39 @@ class MinhashIngestStreamSpec extends SparkTestBase {
     (101L, "another unrelated document describing mountain hiking trails " +
       "weather conditions and camping equipment for the summer season"),
     (102L, s"$base extra1 extra2"))
+  // the matrix's 4th batch extends the chain, so its probe (after the
+  // first mid-stream compaction) pairs with batch 2's 102
+  private val inc4 = inc :+ (103L, s"$base extra1 extra2 extra3")
 
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_ingest_$tag").toString
-
-  private def freshIndex(): String = {
+  protected def freshIndex(): String = {
     val dir = tmp("idx")
     Dedup.writeMinhashIndex(corpus, dir)
     dir
   }
 
+  protected lazy val batches: Seq[DataFrame] = inc4.map(d => Seq(d).toDF("doc_id", "text"))
+  protected def kernel(indexDir: String) =
+    Dedup.minhashIngestKernel(indexDir, "doc_id", "text", threshold = 0.8)
+  protected def ingest(feedDir: String, indexDir: String, outDir: String,
+      checkpointDir: String, compactEvery: Int): DataFrame =
+    MinhashIngestStream.ingest(spark, feedDir, feedSchema, indexDir, outDir,
+      checkpointDir, threshold = 0.8, maxFilesPerTrigger = Some(1),
+      compactEvery = compactEvery)
+  protected def singleShot(n: Int): Set[Seq[Any]] =
+    rowSet(Dedup.incrementalNearDupPairs(
+      spark, freshIndex(), inc4.take(n).toDF("doc_id", "text"), threshold = 0.8))
+  protected def probeLater(indexDir: String): Set[Seq[Any]] =
+    rowSet(Dedup.incrementalNearDupPairs(spark, indexDir,
+      Seq((200L, s"$base extra1 extra2 extra3 extra4")).toDF("doc_id", "text"),
+      threshold = 0.8))
+  protected val laterHit = 103L
+  // batch 2's 102 pairs with 100 through the compacted segment, batch 3's
+  // 103 with 102 in the segment written after it
+  protected val compactedHits = Set((100L, 102L), (102L, 103L))
+  protected val hitColumns = ("id_a", "id_b")
+
   private def pairSet(df: DataFrame): Set[(Long, Long)] =
     df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-
-  private def outPairs(outDir: String): DataFrame =
-    spark.read.parquet(outDir).drop("batch")
-
-  /** Single-shot reference over the whole increment (fresh index copy). */
-  private lazy val oneShotRows: Set[Seq[Any]] =
-    Dedup.incrementalNearDupPairs(
-        spark, freshIndex(), inc.toDF("doc_id", "text"), threshold = 0.8)
-      .collect().map(_.toSeq).toSet
 
   test("3-batch drain == single-shot probe; cross-batch pair caught; index grows") {
     val indexDir = freshIndex()
@@ -72,7 +80,7 @@ class MinhashIngestStreamSpec extends SparkTestBase {
     val streamed = MinhashIngestStream.ingest(
       spark, feedDir, feedSchema, indexDir, tmp("out"), tmp("ckpt"),
       threshold = 0.8, maxFilesPerTrigger = Some(1))
-    assert(streamed.collect().map(_.toSeq).toSet === oneShotRows)
+    assert(rowSet(streamed) === reference(3))
     val got = pairSet(streamed)
     assert(got.contains((100L, 102L)),
       s"cross-batch near-dup pair must be caught: $got")
@@ -88,88 +96,6 @@ class MinhashIngestStreamSpec extends SparkTestBase {
       s"index did not grow with the ingested batches: ${pairSet(second)}")
   }
 
-  /** Drive the batch body directly (the foreachBatch contract: batch N =
-    * feed doc N here), optionally crashing mid-batch, then replaying —
-    * the converged output must ALWAYS equal the single-shot answer.
-    */
-  private def batchDf(i: Int): DataFrame = Seq(inc(i)).toDF("doc_id", "text")
-
-  private def runAll(indexDir: String, outDir: String): Unit =
-    inc.indices.foreach(i =>
-      MinhashIngestStream.ingestBatch(batchDf(i), i.toLong, indexDir, outDir,
-        threshold = 0.8))
-
-  test("crash between pair-write and index append: replay converges") {
-    val indexDir = freshIndex()
-    val outDir = tmp("out")
-    // batch 0 writes its pairs, then dies before appendToMinhashIndex
-    Dedup.incrementalNearDupPairs(spark, indexDir, batchDf(0), threshold = 0.8)
-      .write.mode("overwrite").parquet(s"$outDir/batch=0")
-    assert(Segments.liveSegs(spark, indexDir).isEmpty)
-    // restart: streaming re-runs batch 0 from the checkpoint, then 1, 2
-    runAll(indexDir, outDir)
-    assert(outPairs(outDir).collect().map(_.toSeq).toSet === oneShotRows)
-  }
-
-  test("crash between the bucket and set part-writes: nothing surfaces, replay converges") {
-    val indexDir = freshIndex()
-    val outDir = tmp("out")
-    // batch 0 wrote pairs AND its buckets part, then died before the sets
-    // part — the uncommitted segment must be invisible to the replayed
-    // probe (a half-append would generate candidates that silently fail
-    // the verify join and DROP real pairs)
-    Dedup.incrementalNearDupPairs(spark, indexDir, batchDf(0), threshold = 0.8)
-      .write.mode("overwrite").parquet(s"$outDir/batch=0")
-    Segments.writePart(
-      Seq((100L, 7L, 7L)).toDF("id", "band", "bucket"), indexDir, "buckets", "batch-0")
-    assert(Segments.liveSegs(spark, indexDir).isEmpty)
-    runAll(indexDir, outDir)
-    assert(outPairs(outDir).collect().map(_.toSeq).toSet === oneShotRows)
-  }
-
-  test("crash after index commit but before checkpoint commit: replay is identical") {
-    val indexDir = freshIndex()
-    val outDir = tmp("out")
-    // batch 0 ran to completion — pairs written, segment committed — but
-    // the checkpoint commit never landed, so streaming re-runs batch 0:
-    // the replayed probe sees the batch's OWN rows in the index and must
-    // still produce the identical pair set (increment-wins resolution)
-    MinhashIngestStream.ingestBatch(batchDf(0), 0L, indexDir, outDir, threshold = 0.8)
-    val afterFirst = outPairs(outDir).collect().map(_.toSeq).toSet
-    MinhashIngestStream.ingestBatch(batchDf(0), 0L, indexDir, outDir, threshold = 0.8)
-    assert(outPairs(outDir).collect().map(_.toSeq).toSet === afterFirst,
-      "replay of a fully-committed batch must rewrite identical output")
-    assert(Segments.liveSegs(spark, indexDir) === Seq("batch-0"),
-      "replay must not duplicate the batch's index segment")
-    MinhashIngestStream.ingestBatch(batchDf(1), 1L, indexDir, outDir, threshold = 0.8)
-    MinhashIngestStream.ingestBatch(batchDf(2), 2L, indexDir, outDir, threshold = 0.8)
-    assert(outPairs(outDir).collect().map(_.toSeq).toSet === oneShotRows)
-  }
-
-  test("compaction interleaved mid-stream: output identical, segments bounded") {
-    val indexDir = freshIndex()
-    val feedDir = tmp("feed")
-    // 4 single-doc batches (one extra chain member exercises a probe
-    // against an already-compacted segment in batch 4)
-    val inc4 = inc :+ (103L, s"$base extra1 extra2 extra3")
-    inc4.foreach { doc =>
-      Seq(doc).toDF("doc_id", "text")
-        .coalesce(1).write.mode("append").parquet(feedDir)
-    }
-    val streamed = MinhashIngestStream.ingest(
-      spark, feedDir, feedSchema, indexDir, tmp("out"), tmp("ckpt"),
-      threshold = 0.8, maxFilesPerTrigger = Some(1), compactEvery = 2)
-    val oneShot4 = Dedup.incrementalNearDupPairs(
-        spark, freshIndex(), inc4.toDF("doc_id", "text"), threshold = 0.8)
-      .collect().map(_.toSeq).toSet
-    assert(streamed.collect().map(_.toSeq).toSet === oneShot4)
-    assert(pairSet(streamed).contains((102L, 103L)),
-      "batch-4 probe must see batch-3's rows through the compacted segment")
-    // 4 batches at compactEvery=2 => everything folded into one live
-    // segment at the final compaction — file count bounded, not linear
-    assert(Segments.liveSegs(spark, indexDir).size === 1,
-      s"live segments not bounded: ${Segments.liveSegs(spark, indexDir)}")
-  }
   test("job budget: the 3-batch compacting drain stays within the pinned job count") {
     // structural guard on per-batch overhead (r11 verdict: wall-clock
     // targets flap with load; the job count does not): budget = the
