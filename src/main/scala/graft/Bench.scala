@@ -61,9 +61,9 @@ object Bench {
   /** Dedup/ANN queries pair-score candidates (the heavy tail); everything
     * else is scan-agg-join shaped. Heavy family runs last.
     */
-  private def isHeavy(name: String): Boolean = {
+  private[graft] def isHeavy(name: String): Boolean = {
     val id = name.takeWhile(_ != '_')
-    (name >= "q20" && name < "q28") ||
+    id.drop(1).toIntOption.exists(n => n >= 20 && n <= 27) ||
       Set("q39", "q43", "q70", "q74", "q76", "q78", "q82", "q84", "q85",
         "q86", "q90", "q91", "q115", "q120", "q122", "q131",
         "q137", "q138", "q139",
@@ -87,43 +87,35 @@ object Bench {
       "q151", "q156", "q165", "q179", "q205", "q213", "q215", "q220", "q234",
       "q238")
 
-  private def isStreaming(name: String): Boolean =
+  private[graft] def isStreaming(name: String): Boolean =
     streamingIds.contains(name.takeWhile(_ != '_'))
+
+  /** Queries whose construction starts (and awaits) a stream drain or a
+    * multi-batch ingest: [[streamingIds]] plus the staged ingests the bench
+    * times as batch queries. Their readout plans are trivial read-backs, so
+    * plan audits skip them.
+    */
+  private[graft] def isDrain(name: String): Boolean =
+    (streamingIds ++ Set("q241", "q242")).contains(name.takeWhile(_ != '_'))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // deterministic extension install: every query sees the same
-    // registry + optimizer rules regardless of its position in the run
-    GraftExtensions.registerAll(spark)
-    // noop sink: full execution of every operator and projection without
-    // write-side cost (a bare .count() lets Catalyst prune projections,
-    // under-measuring expression-heavy queries)
+    val spark = SessionDefaults.local()
     // failures are VISIBLE, not silent (r8 advice): NonFatal only — an
     // OOM/thread-death must kill the run, not record a bogus time — the
     // query is named on stderr, and the error set lands in the artifact
     val errored = scala.collection.mutable.TreeSet.empty[String]
     def run(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
       // plan + action under one CacheScope: operator-pinned blocks are
       // released at scope exit, so one query's cached intermediates can't
       // occupy memory during its neighbors' runs
-      try {
-        graft.operators.CacheScope.scoped {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        }
-      } catch { case scala.util.control.NonFatal(e) =>
+      val (wall, outcome) = SessionDefaults.timedRun(spark, sfDir, fn)
+      outcome.failed.foreach { e =>
         errored += name
         System.err.println(s"[bench] $name failed: ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
-      (System.nanoTime() - t0) / 1e9
+      wall
     }
     // untimed settle between streaming runs: drain GC debt and give the
     // state-store/checkpoint machinery a beat to quiesce
@@ -136,7 +128,7 @@ object Bench {
       // bit_xor, not sum: summing 20M full-range 64-bit hashes overflows
       // a long, which under ANSI mode (Spark 4 default) is a task-killing
       // SparkArithmeticException — the probe must be arithmetic-safe
-      spark.range(0L, 20000000L, 1L, cpus.toInt)
+      spark.range(0L, 20000000L, 1L, spark.sparkContext.defaultParallelism)
         .selectExpr("bit_xor(xxhash64(id)) AS s")
         .write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev scratch: reference-comparison wall clock for the FULL parity
@@ -10,10 +9,7 @@ import org.apache.spark.sql.functions._
   */
 object BenchPipeline {
   def main(args: Array[String]): Unit = {
-    val spark = SessionDefaults(SparkSession.builder()
-      .master("local[32]").config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SessionDefaults.local()
     import spark.implicits._
     val workDir = "target/tmp/pipeline-bench"
     def wipe(dir: String): Unit = {
@@ -44,9 +40,9 @@ object BenchPipeline {
       .write.option("header", true).csv(csvDir)
     // warm the JVM/codegen paths once, then measure
     (1 to 3).foreach { i =>
-      val t0 = System.nanoTime()
-      val counts = graft.star.StarBuilder.runPipeline(spark, csvDir, s"$workDir/wh$i")
-      println(f"[pipeline] run$i ${(System.nanoTime() - t0) / 1e9}%.2f s  counts=$counts")
+      val (wall, counts) = SessionDefaults.timed(
+        graft.star.StarBuilder.runPipeline(spark, csvDir, s"$workDir/wh$i"))
+      println(f"[pipeline] run$i $wall%.2f s  counts=${counts.get}")
     }
     wipe(workDir)
     spark.stop()

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.operators.CacheScope
 
 /** Engine-level session settings every graft entry point applies.
   *
@@ -37,4 +41,41 @@ object SessionDefaults {
       // runtime-small sides, so a 100 TB cache's plan is unchanged — the
       // flag only removes the fixed overhead of under-filled partitions.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+
+  /** The local session every dev, bench and verify main runs on: these
+    * defaults at `local[SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
+    * partitions, the UI off, WARN logs and the graft extensions registered
+    * (so every query sees the same registry and optimizer rules whatever
+    * its position in the run). `confs` are extra session confs.
+    */
+  def local(confs: Seq[(String, String)] = Nil): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val builder = apply(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false"))
+    confs.foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    GraftExtensions.registerAll(spark)
+    spark
+  }
+
+  /** Wall seconds of `body`, run in one [[CacheScope]] so every block it
+    * pins is released at exit, and its result: a non-fatal failure is
+    * returned, not thrown.
+    */
+  def timed[A](body: => A): (Double, Try[A]) = {
+    val t0 = System.nanoTime()
+    val outcome = Try(CacheScope.scoped(body))
+    ((System.nanoTime() - t0) / 1e9, outcome)
+  }
+
+  /** [[timed]] build and run of a named query to the noop sink: every
+    * operator and projection executes without write-side cost (a bare
+    * `count()` lets Catalyst prune projections).
+    */
+  def timedRun(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): (Double, Try[Unit]) =
+    timed(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
 }

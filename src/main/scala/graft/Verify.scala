@@ -1,8 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * plus oracle_sql.json, for the DuckDB oracle compare
+  * (tools/check_oracle.py), and status.json with each query's outcome.
   *
   * Usage: Verify <sfDir> <outDir> [queryName...] — trailing names restrict
   * the dump to those queries (dev iteration); default is all of them.
@@ -11,45 +14,39 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionDefaults(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // deterministic extension install: every query sees the same
-    // registry + optimizer rules regardless of its position in the run
-    GraftExtensions.registerAll(spark)
-    Files.createDirectories(Paths.get(outDir))
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      // scoped: operator-persisted blocks are released after each query's
-      // write completes (see graft.operators.CacheScope)
-      try graft.operators.CacheScope.scoped {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-      }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val spark = SessionDefaults.local()
+    dump(spark, sfDir, outDir,
+      SparkEntry.queries.filter { case (name, _) => only.isEmpty || only(name) })
+    // Jackson escapes every control char, so a tab or CR in an oracle
+    // SQL string still yields valid JSON
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      new ObjectMapper().writeValueAsString(new java.util.TreeMap(SparkEntry.oracleSql.asJava)))
     spark.stop()
+  }
+
+  /** Writes each query's result to `<outDir>/<name>` as one parquet file,
+    * then `<outDir>/status.json`: per query its status (`ok`/`failed`),
+    * wall_s, and rows or the error. A non-fatal failure is recorded there
+    * and named on stderr, and the remaining queries still run; a fatal
+    * error ends the run.
+    */
+  private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Map[String, (SparkSession, String) => DataFrame]): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    val status = new java.util.TreeMap[String, java.util.Map[String, Any]]()
+    queries.foreach { case (name, fn) =>
+      val (wall, outcome) = SessionDefaults.timed {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      }
+      val entry = outcome.fold(
+        e => {
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Map("status" -> "failed", "error" -> s"${e.getClass.getName}: ${e.getMessage}")
+        },
+        _ => Map("status" -> "ok", "rows" -> spark.read.parquet(s"$outDir/$name").count()))
+      status.put(name, (entry + ("wall_s" -> wall)).asJava)
+    }
+    Files.writeString(Paths.get(s"$outDir/status.json"),
+      new ObjectMapper().writeValueAsString(status))
   }
 }

@@ -6,21 +6,18 @@ package graft
   * hash join to CartesianProduct / BroadcastNestedLoopJoin, the round-2
   * ScaleOut bug class — must fail a deterministic test, not wait to be
   * spotted in a noisy number. The committed `plans/<round>/PLAN_AUDIT.txt`
-  * artifact (graft.PlanAudit) is the diffable per-query record
+  * artifact (`graft.Probe plan all`) is the diffable per-query record
   * (exchange/broadcast/codegen/pushed-filter counts); this spec is the
   * hard floor underneath it.
   *
-  * Streaming-drain queries are skipped for the same reason PlanAudit
-  * skips them: building their frame RUNS the drain, and their plan story
-  * is the checkpoint's state-partitioning metadata.
+  * Streaming-drain queries ([[Bench.isDrain]]) are skipped for the same
+  * reason the audit skips them: building their frame RUNS the drain, and
+  * their plan story is the checkpoint's state-partitioning metadata.
   */
 class PlanAuditSpec extends SparkTestBase {
 
   private val sfDir = "/root/testdata/sf0.001"
   private def haveTestdata = new java.io.File(s"$sfDir/lineitem.parquet").exists()
-
-  private def isDrain(name: String): Boolean =
-    (Bench.streamingIds ++ Set("q241", "q242")).contains(name.takeWhile(_ != '_'))
 
   /** Queries whose plan legitimately carries BroadcastNestedLoopJoin:
     * every occurrence is a SCALAR ATTACH — `crossJoin(broadcast(agg))`
@@ -60,10 +57,11 @@ class PlanAuditSpec extends SparkTestBase {
     val bnlj = scala.collection.mutable.ArrayBuffer.empty[String]
     val constructionErrors = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      if (!isDrain(name)) {
+      if (!Bench.isDrain(name)) {
         try graft.operators.CacheScope.scoped {
           // INITIAL physical plan — records the optimizer's stats-driven
-          // strategy choices without executing the query
+          // strategy choices without running the query's own action
+          // (some constructors, q115/q131/q209, run gate actions)
           val plan = fn(spark, sfDir).queryExecution.executedPlan.toString
           if (plan.contains("CartesianProduct")) cartesian += name
           if (plan.contains("BroadcastNestedLoopJoin") &&
@@ -82,5 +80,21 @@ class PlanAuditSpec extends SparkTestBase {
     // error here would silently shrink the sweep)
     assert(constructionErrors.isEmpty,
       s"plans not auditable for: ${constructionErrors.mkString(", ")}")
+  }
+
+  // with AQE on, the plan before execution holds no WholeStageCodegenExec
+  // yet, so an audit of that plan read codegen=0 on every query
+  test("plan audit counts the AQE-final plan of the run: q01 has codegen spans") {
+    assume(haveTestdata)
+    val profile = Probe.RunProfile.install(spark)
+    try {
+      profile.reset()
+      val (_, outcome) = SessionDefaults.timedRun(
+        spark, sfDir, SparkEntry.queries("q01_revenue_by_nation"))
+      outcome.get
+      val shape = Probe.PlanShape.of(profile.lastExecution().executedPlan)
+      assert(shape.codegen > 0, shape.line)
+      assert(shape.scans == 4 && shape.joins.toMap.get("BroadcastHashJoin").contains(3), shape.line)
+    } finally profile.close()
   }
 }
