@@ -17,6 +17,8 @@ import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.util.QueryExecutionListener
 
+import graft.queries.QueryTrait
+
 /** Dev probe over the named queries: one session ([[SessionDefaults.local]]),
   * one timed run ([[SessionDefaults.timedRun]]) and one listener
   * ([[Probe.RunProfile]]) for every mode.
@@ -29,8 +31,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *    JVM so load bursts hit both (default 3 pairs).
   *  - `plan <query...|all> <outFile>`: one shape line per query, counted on
   *    the AQE-final plan of its run; named queries also get that plan's
-  *    `explain("formatted")`. Drains are skipped: building their frame runs
-  *    the drain, and their plan story is the checkpoint's metadata.
+  *    `explain("formatted")`. Declared streams are skipped: building their
+  *    frame runs the drain, and their plan story is the checkpoint's metadata.
   *  - `jobs <query...>`: a warm run, then a measured one: each job's wall,
   *    stages, tasks and description, each micro-batch's `durationMs`, and
   *    the run's wall split into the union of its job intervals and the
@@ -72,10 +74,11 @@ object Probe {
         val names = if (all) SparkEntry.queries.keys.toSeq.sorted else positional.init
         val out = new StringBuilder(
           "# plan-shape audit: node counts of the AQE-final plan of each query's noop run\n" +
-            s"# sfDir=$sfDir; streaming drains skipped (plan story = checkpoint metadata)\n")
+            s"# sfDir=$sfDir; streams skipped (plan story = checkpoint metadata)\n")
         val explains = new StringBuilder
         names.foreach { name =>
-          if (Bench.isDrain(name)) out.append(f"$name%-42s DRAIN (skipped)\n")
+          if (SparkEntry.traits(name)(QueryTrait.Stream))
+            out.append(f"$name%-42s STREAM (skipped)\n")
           else try {
             profile.reset()
             run(name)

@@ -13,7 +13,7 @@ import graft.queries._
   */
 object SparkEntry {
 
-  private def families: Seq[QueryFamily] = Seq(
+  private[graft] def families: Seq[QueryFamily] = Seq(
     ParityQueries, DedupQueries, AnnQueries, TextQueries,
     MultimodalQueries, EventQueries, MaterializeQueries)
 
@@ -35,4 +35,10 @@ object SparkEntry {
     */
   def stages: Map[String, (SparkSession, String) => String] =
     families.flatMap(_.stages).toMap
+
+  /** Every family's declaration for one query (see [[QueryFamily.traits]]);
+    * empty for a light batch query.
+    */
+  def traits(name: String): Set[QueryTrait] =
+    families.flatMap(_.traits.getOrElse(name, Set.empty)).toSet
 }

@@ -104,6 +104,9 @@ object AnnQueries extends QueryFamily {
     "ivfpq_index" -> (stagedIvfPqIndexDir _),
     "pca_model" -> (stagedPcaModelDir _))
 
+  override def traits: Map[String, Set[QueryTrait]] = QueryTrait.of(
+    QueryTrait.Heavy -> Seq("q26_ann_topk", "q27_ann_topk_lsh", "q39_ann_topk_ivf"))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // per-vector INT8 scalar quantization (the FAISS SQ8 storage shape
     // beside q93's product quantization): code_i = round((x_i − min) /

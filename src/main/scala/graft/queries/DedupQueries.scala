@@ -249,6 +249,21 @@ object DedupQueries extends QueryFamily {
         .write.mode("overwrite").parquet(stage)
     }
 
+  override def traits: Map[String, Set[QueryTrait]] = QueryTrait.of(
+    QueryTrait.Heavy -> Seq("q20_dedup_exact", "q21_dedup_minhash_lsh", "q22_dedup_simhash",
+      "q23_dedup_ngram_jaccard", "q24_dedup_embedding", "q25_dedup_embedding_lsh",
+      "q43_dedup_groups", "q70_dedup_incremental_minhash", "q74_train_split",
+      "q76_eval_contamination", "q78_dedup_incremental_embedding", "q82_repeated_spans",
+      "q84_repeated_spans_incremental", "q85_boilerplate_by_source", "q86_strip_repeated_spans",
+      "q90_dedup_semantic_incremental", "q91_dedup_groups_incremental", "q115_dedup_groups_chain",
+      "q120_link_pagerank", "q122_dedup_containment", "q137_er_name_pairs", "q138_link_triangles",
+      "q139_link_kcore", "q148_decontaminate_fuzzy", "q203_link_bipartite"),
+    QueryTrait.Stream -> Seq("q92_dedup_ingest_stream", "q95_dedup_ingest_stream_embedding",
+      "q100_dedup_ingest_stream_semantic", "q102_ann_ingest_stream_ivfpq"),
+    QueryTrait.Paced -> Seq("q92_dedup_ingest_stream", "q95_dedup_ingest_stream_embedding",
+      "q100_dedup_ingest_stream_semantic", "q102_ann_ingest_stream_ivfpq",
+      "q115_dedup_groups_chain"))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q20_dedup_exact" -> ((s, dir) =>
       Dedup.exactGroups(table(s, dir, "documents"))

@@ -175,6 +175,14 @@ object EventQueries extends QueryFamily {
   override def stages: Map[String, (SparkSession, String) => String] = Map(
     "events_stage" -> (stagedEventsDir _))
 
+  override def traits: Map[String, Set[QueryTrait]] = QueryTrait.of(
+    QueryTrait.Stream -> Seq("q36_events_hourly_stream", "q38_events_sessionize_stream",
+      "q44_events_sessionize_native", "q47_events_enriched_stream",
+      "q49_events_attribution_stream", "q57_events_dedup_stream", "q64_events_hourly_topk_stream",
+      "q151_events_hopping_stream", "q156_events_trend_stream",
+      "q165_events_attribution_outer_stream", "q179_user_decay_score_stream",
+      "q205_rate_limit_stream"))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q35_events_hourly" -> ((s, dir) =>
       EventStreams.hourlyByType(graft.Tables.events(s, dir))

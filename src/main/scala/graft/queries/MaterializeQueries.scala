@@ -143,6 +143,10 @@ object MaterializeQueries extends QueryFamily {
   override def stages: Map[String, (SparkSession, String) => String] = Map(
     "mat_corpus_state" -> (stagedCorpusMatDir _))
 
+  override def traits: Map[String, Set[QueryTrait]] = QueryTrait.of(
+    QueryTrait.Heavy -> Seq("q131_materialize_training", "q209_materialize_incremental"),
+    QueryTrait.Paced -> Seq("q131_materialize_training", "q209_materialize_incremental"))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q131_materialize_training" -> ((s, dir) => {
       val docs = table(s, dir, "documents")
@@ -296,19 +300,27 @@ object MaterializeQueries extends QueryFamily {
       val sideCounts = corpusKept.select(col("lang"), lit(false).as("_inc"))
         .unionByName(kept.select(col("lang"), lit(true).as("_inc")))
         .groupBy("lang", "_inc").count().collect().toSeq
-      sideCounts.foreach(r => require(!r.isNullAt(0),
-        "temperature mixture: 'lang' contains NULL — a mixture group " +
-          "needs a non-null key; filter or coalesce upstream"))
-      if (!sideCounts.exists(_.getBoolean(1)))
-        s.createDataFrame(
-          s.sparkContext.emptyRDD[org.apache.spark.sql.Row], outputSchema)
-      else {
-        val weights = graft.operators.Mixture.weightsFromCounts(
-          sideCounts.groupBy(_.getString(0)).view
-            .mapValues(_.map(_.getLong(2)).sum).toSeq)
-        materializeIncrement(s, dir, stateDir, kept, pieces, corpusKept, weights)
+      incrementWeights(sideCounts) match {
+        case Some(w) => materializeIncrement(s, dir, stateDir, kept, pieces, corpusKept, w)
+        case None => s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], outputSchema)
       }
     }))
+
+  /** q209's gate over its (lang, is-increment, count) rows: the mixture
+    * weights of the per-lang sums over corpus and increment, or None when
+    * the increment has no rows. A NULL lang fails fast even when the
+    * increment is empty: a corpus that cannot be mixed is a loud failure,
+    * not an empty result.
+    */
+  private[queries] def incrementWeights(
+      sideCounts: Seq[org.apache.spark.sql.Row]): Option[Map[String, Double]] = {
+    sideCounts.foreach(r => require(!r.isNullAt(0),
+      "temperature mixture: 'lang' contains NULL — a mixture group " +
+        "needs a non-null key; filter or coalesce upstream"))
+    Option.when(sideCounts.exists(_.getBoolean(1)))(
+      graft.operators.Mixture.weightsFromCounts(
+        sideCounts.groupBy(_.getString(0)).view.mapValues(_.map(_.getLong(2)).sum).toSeq))
+  }
 
   /** q209 stages 6-9: weights from corpus+increment (pre-collected by
     * the caller's gate action), increment-only resample, corpus per-lang

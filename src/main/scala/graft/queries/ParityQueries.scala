@@ -204,6 +204,10 @@ object ParityQueries extends QueryFamily {
         .write.mode("overwrite").parquet(stage)
     }
 
+  override def traits: Map[String, Set[QueryTrait]] = QueryTrait.of(
+    QueryTrait.Stream -> Seq("q83_scd2_asof_enrich_stream", "q213_txtable_ingest_stream",
+      "q234_txtable_stream_source", "q238_txtable_sink_stream", "q242_txgroup_sink_stream"))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- flagship: scan -> multi-join -> agg -> sort (SURVEY §7.1) ----
     // Scale notes: lineitem⋈orders is a key-partitioned shuffle join (both

@@ -30,4 +30,33 @@ trait QueryFamily {
     * (the r7 bench's uninterpretable totals). Each returns the stage dir.
     */
   def stages: Map[String, (SparkSession, String) => String] = Map.empty
+
+  /** How each query runs, by full query name; an undeclared query is a
+    * light batch query. Bench groups and paces its runs by these, and
+    * plan audits skip the [[QueryTrait.Stream]] queries.
+    */
+  def traits: Map[String, Set[QueryTrait]] = Map.empty
+}
+
+sealed trait QueryTrait
+
+object QueryTrait {
+  /** Starts a checkpointed streaming query and awaits its drain: Bench
+    * times it last, after a settle, and plan audits skip it (its frame's
+    * build runs the drain).
+    */
+  case object Stream extends QueryTrait
+  /** Candidate-pair scoring or multi-stage operator work: Bench times it
+    * after the light batch queries.
+    */
+  case object Heavy extends QueryTrait
+  /** Its wall follows the host's per-job pace: Bench records its ratio
+    * to the q44 canary.
+    */
+  case object Paced extends QueryTrait
+
+  /** A family's [[QueryFamily.traits]] from one name list per trait. */
+  def of(declared: (QueryTrait, Seq[String])*): Map[String, Set[QueryTrait]] =
+    declared.flatMap { case (t, names) => names.map(_ -> t) }
+      .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
 }

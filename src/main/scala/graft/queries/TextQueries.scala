@@ -18,6 +18,13 @@ import graft.functions.expr.HashFunctions.rollingFingerprint
   */
 object TextQueries extends QueryFamily {
 
+  override def traits: Map[String, Set[QueryTrait]] = QueryTrait.of(
+    QueryTrait.Heavy -> Seq("q152_tfidf_cosine_topk", "q212_kneser_ney_trigram"),
+    QueryTrait.Stream -> Seq("q113_token_percentiles_sketch_stream",
+      "q116_heavy_hitters_cms_stream", "q128_kmv_distinct_stream", "q215_dsir_counts_stream",
+      "q220_dsir_select_stream"),
+    QueryTrait.Paced -> Seq("q220_dsir_select_stream"))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q28_text_langid" -> ((s, dir) =>
       table(s, dir, "documents")
