@@ -5,6 +5,9 @@ import java.nio.file.{Files, Paths}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -33,10 +36,10 @@ import graft.queries.QueryTrait
   *    the AQE-final plan of its run; named queries also get that plan's
   *    `explain("formatted")`. Declared streams are skipped: building their
   *    frame runs the drain, and their plan story is the checkpoint's metadata.
-  *  - `jobs <query...>`: a warm run, then a measured one: each job's wall,
-  *    stages, tasks and description, each micro-batch's `durationMs`, and
-  *    the run's wall split into the union of its job intervals and the
-  *    driver-only gap.
+  *  - `jobs <query...|all>`: a warm run, then a measured one: each job's
+  *    wall, stages, tasks and description, each micro-batch's `durationMs`,
+  *    each OS process the run launched ([[Probe.launches]]), and the run's
+  *    wall split into the union of its job intervals and the driver-only gap.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
@@ -94,12 +97,15 @@ object Probe {
         Files.writeString(Paths.get(outFile), out.append(explains).toString)
         println(s"[probe plan] ${names.size} queries -> $outFile")
       case "jobs" =>
-        positional.foreach { name =>
+        val names = if (positional == Seq("all")) SparkEntry.queries.keys.toSeq.sorted else positional
+        names.foreach { name => try {
           run(name) // warm: class loading, codegen compile
           profile.reset()
-          val t0 = System.currentTimeMillis()
-          run(name)
-          val t1 = System.currentTimeMillis()
+          val ((t0, t1), procs) = launches {
+            val t0 = System.currentTimeMillis()
+            run(name)
+            (t0, System.currentTimeMillis())
+          }
           val (jobs, batches) = profile.recorded()
           jobs.foreach { j =>
             println(f"[probe jobs]   job ${j.id}%4d ${(j.end - j.start) / 1e3}%7.3f s " +
@@ -110,10 +116,15 @@ object Probe {
               p.durationMs.asScala.toSeq.sortBy(_._1).map { case (k, v) => s"$k:$v" }
                 .mkString("{", ",", "}"))
           }
+          procs.foreach(p => println(s"[probe jobs]   proc ${p.thread}: ${p.command.take(120)}"))
           val union = unionMs(jobs.map(j => (math.max(j.start, t0), math.min(j.end, t1))))
           println(f"[probe jobs] $name wall=${(t1 - t0) / 1e3}%.3f s jobs=${jobs.size} " +
-            f"batches=${batches.size} jobUnion=${union / 1e3}%.3f s gap=${(t1 - t0 - union) / 1e3}%.3f s")
-        }
+            f"batches=${batches.size} jobUnion=${union / 1e3}%.3f s gap=${(t1 - t0 - union) / 1e3}%.3f s " +
+            s"procs=${procs.size}")
+        } catch { case scala.util.control.NonFatal(e) =>
+          println(s"[probe jobs] $name ERROR ${e.getClass.getSimpleName}: " +
+            String.valueOf(e.getMessage).take(80))
+        } }
       case other =>
         sys.error(s"unknown mode '$other' (time | ab | plan | jobs)")
     } finally spark.stop()
@@ -130,6 +141,36 @@ object Probe {
       if (e > reach) { covered += e - math.max(s, reach); reach = e }
     }
     covered
+  }
+
+  /** One OS process launch: its command line, the launching thread and
+    * its stack frames (`class.method`, innermost first).
+    */
+  private[graft] final case class Launch(command: String, thread: String, frames: Seq[String])
+
+  /** `body`'s result and every process the JVM launched while it ran, from
+    * a JFR recording of `jdk.ProcessStart` alone (with stack traces).
+    */
+  private[graft] def launches[A](body: => A): (A, Seq[Launch]) = {
+    val recording = new Recording()
+    val file = Files.createTempFile("graft-launches", ".jfr")
+    try {
+      recording.enable("jdk.ProcessStart").withStackTrace()
+      recording.start()
+      val result = try body finally recording.stop()
+      recording.dump(file)
+      // a dump also holds the events of any other recording in this JVM
+      val events = RecordingFile.readAllEvents(file).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart").map { e =>
+        val frames = Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+          .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
+        Launch(e.getString("command"), Option(e.getThread).fold("?")(_.getJavaName), frames)
+      }
+      (result, events)
+    } finally {
+      recording.close()
+      Files.deleteIfExists(file)
+    }
   }
 
   private[graft] final case class Job(id: Int, start: Long, end: Long, stages: Int, tasks: Int,

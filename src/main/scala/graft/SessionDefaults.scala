@@ -5,6 +5,7 @@ import scala.util.Try
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.CacheScope
+import graft.sources.LocalFs
 
 /** Engine-level session settings every graft entry point applies.
   *
@@ -41,6 +42,10 @@ object SessionDefaults {
       // runtime-small sides, so a 100 TB cache's plan is unchanged — the
       // flag only removes the fixed overhead of under-filled partitions.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      // the `file` scheme on graft.sources.LocalFs, for both Hadoop APIs:
+      // no chmod/readlink child process per created file or checkpoint rename
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs.Checksummed].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[LocalFs.Context].getName)
 
   /** The local session every dev, bench and verify main runs on: these
     * defaults at `local[SPARK_GRAFT_CPUS]` (default 4) with as many shuffle

@@ -47,6 +47,15 @@ object Apss {
     * "shuffle keys, not n-gram strings" — the same hashed-dimension
     * contract as [[Dedup.ngramJaccardPairs]]'s inverted index; the hash
     * never enters the arithmetic, only equality).
+    *
+    * Collision bound: two distinct grams sharing a 64-bit key merge into
+    * one dimension (summed tf, one df), which the string-keyed oracle
+    * would not. For n distinct grams the birthday bound puts the expected
+    * number of colliding pairs at n(n-1)/2 / 2^64 ≈ n²/2^65: 2.7e-4 at
+    * 10^8 grams, 0.027 at 10^9, and about even odds of at least one
+    * collision near 5×10^9. The sf0.1 corpus holds n = 27,213 distinct
+    * trigrams (DuckDB count over `documents`), 2.0e-11 expected pairs; a
+    * corpus past ~10^9 distinct grams should key on 128 bits.
     */
   def tfidfCosineTopK(
       docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",

@@ -14,14 +14,17 @@ import org.apache.spark.sql.SparkSession
   */
 object Scratch {
 
-  /** RAM-backed scratch root when available: a micro-batch drain pays a
-    * per-batch fsync tax on the offset/commit logs and per-partition
-    * state deltas; on a disk-backed /tmp that tax dominates small-SF
-    * streaming runs. Checkpoints and (tiny) result sinks are transient
-    * per-run artifacts, so tmpfs is semantics-neutral — a production
-    * deployment would put the checkpoint on durable storage and size the
-    * batch interval so the fsync amortizes. (Constant local paths, so
-    * NIO probes suffice — no URI-shaped strings here.)
+  /** RAM-backed scratch root when available: a micro-batch drain writes
+    * and renames offset/commit log entries and per-partition state deltas
+    * every batch, and a disk-backed /tmp adds write latency to each.
+    * Measured, the per-batch tax was process launches, not fsync: Hadoop's
+    * local FS launched `chmod`/`readlink` per checkpoint file, and with
+    * [[graft.sources.LocalFs]] a traced `ingest_commit` run's streaming
+    * log commit fell from 0.46 to 0.02 s. Checkpoints and (tiny) result
+    * sinks are transient per-run artifacts, so tmpfs is semantics-neutral
+    * — a production deployment would put the checkpoint on durable
+    * storage. (Constant local paths, so NIO probes suffice — no
+    * URI-shaped strings here.)
     */
   lazy val root: String = {
     val shm = java.nio.file.Paths.get("/dev/shm")

@@ -67,8 +67,8 @@ class PlanAuditSpec extends SparkTestBase {
     */
   private val unpartitionedWindows: Set[String] = Set(
     "q06_join_composite_dim", "q16_surrogate_keys", "q55_tokenize_ids",
-    "q169_events_peak_concurrency", "q171_phrase_search", "q177_order_price_deciles",
-    "q180_part_skyline", "q185_order_drift_psi")
+    "q169_events_peak_concurrency", "q177_order_price_deciles", "q180_part_skyline",
+    "q185_order_drift_psi")
 
   /** Every batch query's INITIAL physical plan — the optimizer's
     * stats-driven strategy choices, without running the query's own
